@@ -15,7 +15,7 @@ k-means and BPE trainers.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -476,7 +476,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 100,
-    caches: list | None = None,
 ) -> DataFrame:
     """k-core membership via iterative peeling — the graph-family
     density primitive next to PageRank (centrality), connected
@@ -501,14 +500,21 @@ def k_core(
 
     Scale shape: each round is ONE partial-aggregable degree count
     (explode both endpoints → groupBy node) plus two anti-joins keyed
-    on node — all shuffles on the node key, no windows, no all-pairs.
-    The weak frame per round is bounded by that round's casualties;
-    ``localCheckpoint`` truncates the growing loop lineage exactly as
-    in :func:`pagerank`.  Round count equals the peel DEPTH of the
-    graph (typically O(log N) in practice, ≪ N always); ``max_iter``
-    bounds the driver loop and the operator RAISES on non-convergence
-    rather than silently returning a partially-peeled set — at 100 TB
-    raise the bound, never trust a truncated peel.
+    on node — all shuffles on the node key, no windows, no all-pairs —
+    and ONE Spark action: the round's surviving edge set is
+    ``localCheckpoint(eager=True)``-ed, and its row count is read from
+    an :class:`~pyspark.sql.Observation` on that same job.  The probe
+    needs no separate count of the weak nodes: every node in the
+    round's degree rollup lies on at least one active edge, so "no weak
+    node" holds exactly when the round removed no edge (count
+    unchanged).  The canonical edge set is the first counted
+    checkpoint, and each round's checkpoint releases its predecessor
+    synchronously.  Round count equals the peel DEPTH of the graph
+    plus the one confirming round (typically O(log N) in practice,
+    ≪ N always); ``max_iter`` bounds the driver loop and the operator
+    RAISES on non-convergence rather than silently returning a
+    partially-peeled set — at 100 TB raise the bound, never trust a
+    truncated peel.
 
     Determinism: pure set arithmetic on exact integers — no floats
     anywhere — so a SQL oracle can replay the identical peel
@@ -517,21 +523,25 @@ def k_core(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
+    from ..session import checkpoint_handle, scope_caches
+
+    def counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+            eager=True
+        )
+        return df, obs.get["n"]
+
     a, b = F.col(src), F.col(dst)
-    und = (
+    active, n_edges = counted_checkpoint(
         edges.select(
             F.least(a, b).alias("u"),
             F.greatest(a, b).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .persist()
     )
-    und.count()
-    from ..session import checkpoint_handle, scope_caches
-
-    active = und
-    live_handle = None
+    live_handle = checkpoint_handle(active)
     for _ in range(max_iter):
         deg = (
             active.select(F.col("u").alias("node"))
@@ -539,28 +549,20 @@ def k_core(
             .groupBy("node")
             .agg(F.count("*").alias("deg"))
         )
-        weak = deg.filter(F.col("deg") < k).select("node").persist()
-        if weak.count() == 0:
-            weak.unpersist()
-            break
-        active = (
-            active.join(
-                weak.withColumnRenamed("node", "u"), "u", "left_anti"
-            )
+        weak = deg.filter(F.col("deg") < k).select("node")
+        active, n_left = counted_checkpoint(
+            active.join(weak.withColumnRenamed("node", "u"), "u", "left_anti")
             .join(weak.withColumnRenamed("node", "v"), "v", "left_anti")
-            .localCheckpoint(eager=True)
         )
         # The eager checkpoint just materialized from the previous
         # round's blocks — release the superseded round synchronously.
-        new_handle = checkpoint_handle(active)
-        if live_handle is not None:
-            live_handle.unpersist(False)
-        live_handle = new_handle
-        weak.unpersist()
+        live_handle.unpersist(False)
+        live_handle = checkpoint_handle(active)
+        if n_left == n_edges:
+            break
+        n_edges = n_left
     else:
-        und.unpersist()
-        if live_handle is not None:
-            live_handle.unpersist(False)
+        live_handle.unpersist(False)
         raise RuntimeError(
             f"k_core did not converge within max_iter={max_iter} rounds; "
             "raise max_iter (peel depth exceeds the bound)"
@@ -571,11 +573,7 @@ def k_core(
         .groupBy("node")
         .agg(F.count("*").cast("long").alias("core_deg"))
     )
-    final = [live_handle] if live_handle is not None else []
-    if caches is not None:
-        caches.extend([und, *final])
-        return out
-    return scope_caches(out, und, *final)
+    return scope_caches(out, live_handle)
 
 
 def _coreness_hindex(

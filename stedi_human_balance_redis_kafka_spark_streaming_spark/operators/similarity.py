@@ -612,23 +612,36 @@ def mmr_topk(
     exact) and λ = ``lam10``/10 enters as the integer blend
     ``lam10·rel_e6 − (10−lam10)·pen_e6``; no float ever enters a
     comparison, so selection order is bit-reproducible and the unrolled
-    SQL oracle matches exactly.  Ties break on vec_id.
+    SQL oracle matches exactly.  Ties break on vec_id.  Rank 1 is the
+    most relevant candidate; from rank 2 on, a candidate competes only
+    once it has a pair similarity to some selected result.
+
+    ``candidates`` (query_id, vec_id, rel_e6) and ``pair_sims``
+    (query_id, va, vb, sim_e6) may be supplied precomputed, one row per
+    key; both derive deterministically from (corpus, query set,
+    n_cand).
 
     Output: (query_id, vec_id, rel_e6, mmr_rank), mmr_rank 1..k.
 
     Scale shape: the candidate set is bounded (nq·n_cand rows) and every
     MMR structure derives from it — the pairwise-sim frame is
-    nq·n_cand² bounded rows, each greedy round is a bounded join + one
-    window over nq groups, and ``localCheckpoint`` truncates the
-    per-round lineage.  The corpus is touched exactly once (the
-    brute-force candidate generation; swap in ivf_topk for the
-    candidate step at extreme scale — the MMR stage is unchanged).
+    nq·n_cand² bounded rows.  Each candidate is ONE resident row
+    carrying its ``mmr_rank`` (NULL while open) and a running
+    ``pen_e6``.  A greedy round is one window max over each query's
+    open candidates (score DESC, vec_id ASC) that ranks the pick, then
+    one left join with the pair sims to the new pick that raises the
+    open rows' ``pen_e6``.  The k rounds are one linear plan with no
+    checkpoint and no eager job: everything runs in the caller's
+    action.  The corpus is touched exactly once (the brute-force
+    candidate generation; swap in ivf_topk for the candidate step at
+    extreme scale — the MMR stage is unchanged).
     """
     if not 0 <= lam10 <= 10:
         raise ValueError("lam10 must be in [0, 10]")
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
     if k > n_cand:
         raise ValueError("k cannot exceed n_cand")
-    dim = embedding_dim(emb)
     if candidates is None:
         # ``candidates`` lets callers supply a precomputed/cached
         # (query_id, vec_id, rel_e6) frame — the candidate generation is
@@ -641,13 +654,13 @@ def mmr_topk(
             "vec_id",
             F.round(F.col("cos_sim") * 1e6).cast("long").alias("rel_e6"),
         )
-    cand = candidates.persist()
     if pair_sims is None:
         # pairwise sims among each query's candidates (nq·n_cand²
         # bounded) — like ``candidates``, deterministic per (corpus,
         # query set, n_cand) and servable from the build cache.
+        dim = embedding_dim(emb)
         flat = _flat(emb, "vec_id", "d", dim)
-        cv = cand.select("query_id", "vec_id").join(flat, "vec_id")
+        cv = candidates.select("query_id", "vec_id").join(flat, "vec_id")
         a = cv.selectExpr(
             "query_id",
             "vec_id AS va",
@@ -674,53 +687,52 @@ def mmr_topk(
                 F.round(pair_cos * 1e6).cast("long").alias("sim_e6"),
             )
         )
-    pairs = pair_sims.persist()
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("vec_id")
+    to_pick = pair_sims.select(
+        "query_id",
+        F.col("va").alias("vec_id"),
+        F.col("vb").alias("pick"),
+        "sim_e6",
     )
-    sel = (
-        cand.withColumn("score", F.col("rel_e6"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "query_id", "vec_id", "rel_e6", F.lit(1).cast("long").alias("mmr_rank")
-        )
-        .localCheckpoint(eager=False)
+    state = candidates.select(
+        "query_id",
+        "vec_id",
+        "rel_e6",
+        F.lit(None).cast("long").alias("mmr_rank"),
+        F.lit(None).cast("long").alias("pen_e6"),
     )
-    for step in range(2, k + 1):
-        pen = (
-            pairs.join(
-                sel.select("query_id", F.col("vec_id").alias("vb")),
-                ["query_id", "vb"],
+    per_query = Window.partitionBy("query_id")
+    is_open = F.col("mmr_rank").isNull()
+    for step in range(1, k + 1):
+        if step == 1:
+            score, eligible = F.col("rel_e6"), is_open
+        else:
+            score = F.expr(f"{lam10} * rel_e6 - {10 - lam10} * pen_e6")
+            eligible = is_open & F.col("pen_e6").isNotNull()
+        # the max of (score, -vec_id) is the pick: score DESC, vec_id ASC
+        best = F.max(
+            F.when(
+                eligible,
+                F.struct(score.alias("s"), (-F.col("vec_id")).alias("v")),
             )
-            .groupBy("query_id", "va")
-            .agg(F.max("sim_e6").alias("pen_e6"))
+        ).over(per_query)
+        state = state.withColumn("pick", -best["v"]).withColumn(
+            "mmr_rank",
+            F.when(F.col("vec_id") == F.col("pick"), F.lit(step).cast("long"))
+            .otherwise(F.col("mmr_rank")),
         )
-        pick = (
-            cand.join(sel.select("query_id", "vec_id"), ["query_id", "vec_id"], "left_anti")
-            .join(
-                pen.select("query_id", F.col("va").alias("vec_id"), "pen_e6"),
-                ["query_id", "vec_id"],
-            )
-            .withColumn(
-                "score",
-                F.lit(lam10) * F.col("rel_e6")
-                - F.lit(10 - lam10) * F.col("pen_e6"),
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(
+        if step < k:
+            state = state.join(
+                to_pick, ["query_id", "vec_id", "pick"], "left"
+            ).select(
                 "query_id",
                 "vec_id",
                 "rel_e6",
-                F.lit(step).cast("long").alias("mmr_rank"),
+                "mmr_rank",
+                F.greatest("pen_e6", "sim_e6").alias("pen_e6"),
             )
-        )
-        sel = sel.unionByName(pick).localCheckpoint(eager=False)
-    sel.count()  # materialize before releasing the inputs it reads
-    cand.unpersist()
-    pairs.unpersist()
-    return sel
+    return state.filter(F.col("mmr_rank").isNotNull()).select(
+        "query_id", "vec_id", "rel_e6", "mmr_rank"
+    )
 
 
 # ---------------------------------------------------------------------------

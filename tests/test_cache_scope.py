@@ -13,6 +13,8 @@ from __future__ import annotations
 import gc
 import time
 
+import pytest
+
 from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import dedup
 from stedi_human_balance_redis_kafka_spark_streaming_spark.plans import registry
 from stedi_human_balance_redis_kafka_spark_streaming_spark.sources.files import load_table
@@ -22,18 +24,21 @@ def _persistent_rdd_count(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
-def _assert_drains_to(spark, baseline: int) -> None:
+def _assert_drains_to(spark, baseline: int, *, jvm_gc: bool = True) -> None:
     # unpersist(blocking=False) removes the RDD from the persistentRdds
     # map synchronously; poll briefly anyway to absorb finalizer timing.
     # localCheckpoint RDDs (CC label rounds) are reclaimed by the
     # ContextCleaner only after a JVM GC surfaces their weak refs — the
     # same mechanism session.py's periodicGC interval relies on — so the
-    # poll nudges the JVM collector too.
+    # poll nudges the JVM collector too.  ``jvm_gc=False`` counts only
+    # the operators' own synchronous releases: a checkpoint the
+    # ContextCleaner would reclaim minutes later still shows as a leak.
     for _ in range(50):
         if _persistent_rdd_count(spark) <= baseline:
             return
         gc.collect()
-        spark.sparkContext._jvm.System.gc()
+        if jvm_gc:
+            spark.sparkContext._jvm.System.gc()
         time.sleep(0.2)
     assert _persistent_rdd_count(spark) <= baseline
 
@@ -169,3 +174,38 @@ def test_modularity_query_releases_all_caches(spark, sf_dir):
     assert len(rows) >= 1
     del result
     _assert_drains_to(spark, baseline)
+
+
+def test_iterative_queries_leave_no_rdds_on_a_shared_session(spark, sf_dir):
+    """A long-lived session runs ann_mmr_topk and graph_kcore twice each
+    with no clearCache() in between: once each result has run and been
+    dropped, no persistent RDD may remain — no greedy-round state of
+    mmr_topk, no peel-round checkpoint of k_core."""
+    baseline = _persistent_rdd_count(spark)
+    queries = registry.queries()
+    for _ in range(2):
+        for name in ("ann_mmr_topk", "graph_kcore"):
+            result = queries[name](spark, sf_dir)
+            assert result.collect()
+            del result
+            _assert_drains_to(spark, baseline, jvm_gc=False)
+
+
+def test_k_core_non_convergence_raises_and_releases(spark):
+    """A 10-node path peels two leaves per round at k=2, five rounds
+    deep; with max_iter=2 the operator must raise and must not leave
+    its round checkpoints behind."""
+    from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import (
+        graph,
+    )
+
+    baseline = _persistent_rdd_count(spark)
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        graph.k_core(path, k=2, max_iter=2)
+    _assert_drains_to(spark, baseline, jvm_gc=False)
+    # the same path converges (to an empty core) once the bound allows
+    assert graph.k_core(path, k=2, max_iter=6).collect() == []
+    _assert_drains_to(spark, baseline, jvm_gc=False)

@@ -1463,6 +1463,47 @@ def test_mmr_diversifies_away_from_redundant_runner_up(spark):
     assert bf == {1: 2, 2: 1}
 
 
+def _mmr_frames(spark):
+    cand = spark.createDataFrame(
+        [(100, 1, 900_000), (100, 2, 950_000), (100, 3, 500_000)],
+        "query_id long, vec_id long, rel_e6 long",
+    )
+    pairs = spark.createDataFrame(
+        [(100, a, b, 990_000 if {a, b} == {1, 2} else 0)
+         for a in (1, 2, 3) for b in (1, 2, 3) if a != b],
+        "query_id long, va long, vb long, sim_e6 long",
+    )
+    return cand, pairs
+
+
+def test_mmr_rejects_k_below_one(spark):
+    cand, pairs = _mmr_frames(spark)
+    for k in (0, -1):
+        with pytest.raises(ValueError, match="k must be >= 1"):
+            similarity.mmr_topk(
+                None, None, k=k, n_cand=3, candidates=cand, pair_sims=pairs
+            )
+
+
+def test_mmr_with_supplied_frames_runs_no_job_before_the_action(spark):
+    # With both candidates and pair sims supplied the k greedy rounds are
+    # one lazy plan: building it may not launch a single Spark job (no
+    # embedding-width probe, no checkpoint, no count).
+    cand, pairs = _mmr_frames(spark)
+    sc = spark.sparkContext
+    group = "test_mmr_no_eager_job"
+    sc.setJobGroup(group, "mmr_topk construction")
+    try:
+        out = similarity.mmr_topk(
+            None, None, k=3, n_cand=3, candidates=cand, pair_sims=pairs
+        )
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    got = {r["mmr_rank"]: r["vec_id"] for r in out.collect()}
+    assert got == {1: 2, 2: 3, 3: 1}
+
+
 def test_containment_catches_excerpt_that_jaccard_misses(spark):
     # doc 21 is a 4-token excerpt of the 40-token doc 20: containment of
     # the smaller set is 1.0 while Jaccard is far below any dedup bar.

@@ -728,6 +728,97 @@ def test_k_core_matches_brute_force_peel(spark, edges, k):
     assert got == dict(expected)
 
 
+def _greedy_mmr(cand, sims, k, lam10):
+    """Reference greedy MMR on plain dicts: rank 1 is the most relevant
+    candidate; from rank 2 on a candidate competes with score
+    lam10·rel − (10−lam10)·max sim to the selected set, and only once it
+    has some pair sim to a selected result.  Ties break on vec_id."""
+    by_q: dict = {}
+    for q, v, rel in cand:
+        by_q.setdefault(q, {})[v] = rel
+    out = set()
+    for q, rels in by_q.items():
+        sel: list = []
+        for step in range(1, k + 1):
+            best = None
+            for v, rel in rels.items():
+                if v in sel:
+                    continue
+                if step == 1:
+                    score = rel
+                else:
+                    pen = [sims[q, v, s] for s in sel if (q, v, s) in sims]
+                    if not pen:
+                        continue
+                    score = lam10 * rel - (10 - lam10) * max(pen)
+                if best is None or (-score, v) < best:
+                    best = (-score, v)
+            if best is None:
+                break
+            sel.append(best[1])
+            out.add((q, best[1], rels[best[1]], step))
+    return out
+
+
+@st.composite
+def _mmr_inputs(draw):
+    cand, sims = [], {}
+    n_q = draw(st.integers(min_value=1, max_value=3))
+    for q in range(n_q):
+        ids = draw(
+            st.lists(
+                st.integers(min_value=0, max_value=9),
+                min_size=1,
+                max_size=6,
+                unique=True,
+            )
+        )
+        # tiny value ranges make equal scores common
+        cand += [(q, v, draw(st.integers(min_value=0, max_value=2))) for v in ids]
+        for va in ids:
+            for vb in ids:
+                sim = draw(st.sampled_from([None, 0, 1, 2, 3]))
+                if va != vb and sim is not None:
+                    sims[q, va, vb] = sim
+    # forced tie: equal relevance and equal pair sims everywhere, so
+    # every pick falls to the vec_id tie-break (3, 5, 7, 8 in order)
+    tie = [8, 3, 7, 5]
+    cand += [(n_q, v, 4) for v in tie]
+    sims.update({(n_q, a, b): 1 for a in tie for b in tie if a != b})
+    # a query with a single candidate: fewer than k for every k >= 2
+    cand.append((n_q + 1, 0, 1))
+    return cand, sims
+
+
+@settings(**_SETTINGS)
+@given(
+    inputs=_mmr_inputs(),
+    k=st.integers(min_value=1, max_value=4),
+    lam10=st.integers(min_value=0, max_value=10),
+)
+def test_mmr_topk_matches_greedy_reference(spark, inputs, k, lam10):
+    from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import (
+        similarity,
+    )
+
+    cand, sims = inputs
+    cand_df = spark.createDataFrame(
+        cand, "query_id long, vec_id long, rel_e6 long"
+    )
+    pairs_df = spark.createDataFrame(
+        [(q, a, b, s) for (q, a, b), s in sims.items()],
+        "query_id long, va long, vb long, sim_e6 long",
+    )
+    got = {
+        tuple(r)
+        for r in similarity.mmr_topk(
+            None, None, k=k, n_cand=6, lam10=lam10,
+            candidates=cand_df, pair_sims=pairs_df,
+        ).collect()
+    }
+    assert got == _greedy_mmr(cand, sims, k, lam10)
+
+
 @settings(**_SETTINGS)
 @given(
     edges=st.lists(
