@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import tokens
+from ..session import checkpoint, persist, release, scoped
 
 _SALT_OK = re.compile(r"^[A-Za-z0-9_\-]*$")
 
@@ -326,13 +327,13 @@ def pack_sequences(
     )
 
 
+@scoped
 def connected_components(
     edges: DataFrame,
     *,
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 25,
-    caches: list | None = None,
 ) -> DataFrame:
     """Connected components of an undirected pair graph by iterative
     min-label propagation: every node's label converges to the minimum
@@ -350,32 +351,24 @@ def connected_components(
     that round's (lazy) checkpoint, so the previous round's blocks are
     dead the moment the probe returns — they are released immediately
     (deterministic, no ContextCleaner / JVM-GC timing).  The FINAL
-    round's blocks back the returned frame; with ``caches`` provided
-    its release handle is appended for the caller to scope to the
-    query result (the registry pattern), else it is left to the
-    ContextCleaner (safe default for callers that derive from the
-    result).
+    round's blocks back the returned frame and are freed with it.
     """
-    sym = (
+    sym = persist(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
-        .persist()
     )
     sym.count()
     # Lazy checkpoints throughout: the Σ-label convergence probe is the
     # round's ONLY consumer, so letting it materialize the checkpoint
     # folds what were two jobs per round (eager checkpoint + probe) into
     # one — pure fixed-overhead reduction, same lineage truncation.
-    from ..session import checkpoint_handle
-
-    labels = (
+    labels = checkpoint(
         sym.select(F.col("u").alias("node"))
         .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False)
+        .withColumn("label", F.col("node")),
+        eager=False,
     )
-    live_handle = checkpoint_handle(labels)
 
     # Convergence probe: Σ label is strictly decreasing until the fixpoint
     # (labels only ever drop to a smaller reachable id), so one cheap
@@ -393,26 +386,22 @@ def connected_components(
         msgs = sym.join(labels, sym["u"] == labels["node"]).select(
             F.col("v").alias("node"), F.col("label")
         )
-        new_labels = (
+        new_labels = checkpoint(
             msgs.unionByName(labels)
             .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
+            .agg(F.min("label").alias("label")),
+            eager=False,
         )
-        new_handle = checkpoint_handle(new_labels)
         new_sum = _label_sum(new_labels)
         # The probe materialized this round's checkpoint; the previous
         # round's blocks are now dead — release them synchronously.
-        live_handle.unpersist(False)
-        live_handle = new_handle
+        release(labels)
         labels = new_labels
         if new_sum == prev_sum:
             converged = True
             break
         prev_sum = new_sum
-    sym.unpersist()
-    if caches is not None:
-        caches.append(live_handle)
+    release(sym)
     if not converged:
         # A component with diameter > max_iter would otherwise yield
         # silently-wrong cluster ids; non-convergence must be loud.
@@ -457,13 +446,13 @@ def _small_star(e: DataFrame) -> DataFrame:
     return rewired.unionByName(to_min).distinct()
 
 
+@scoped
 def cc_star(
     edges: DataFrame,
     *,
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 30,
-    caches: list | None = None,
 ) -> DataFrame:
     """Connected components by alternating large-star/small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -487,29 +476,24 @@ def cc_star(
 
     Checkpoint lifecycle (see :func:`connected_components`): each
     round's probe materializes its checkpoint, so the superseded
-    round's blocks are released synchronously; the final edge frame's
-    and the node frame's handles go to ``caches`` when provided (the
-    returned join reads both).
+    round's blocks are released synchronously; the final edge frame and
+    the node frame back the returned join.
     """
-    from ..session import checkpoint_handle
-
-    e = (
+    e = checkpoint(
         edges.select(
             F.greatest(F.col(src), F.col(dst)).alias("u"),
             F.least(F.col(src), F.col(dst)).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
-    e_handle = checkpoint_handle(e)
-    nodes = (
+    nodes = checkpoint(
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
-    nodes_handle = checkpoint_handle(nodes)
 
     def _probe(df: DataFrame):
         row = df.agg(
@@ -528,22 +512,19 @@ def cc_star(
     nodes.count()
     converged = False
     for _ in range(max_iter):
-        nxt = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        nxt_handle = checkpoint_handle(nxt)
+        nxt = checkpoint(_small_star(_large_star(e)), eager=False)
         cur = _probe(nxt)
         # Probe-stable: confirm exactly (both directions; counts are
         # equal so one exceptAll side plus the count check suffices).
         stable = cur == prev and nxt.exceptAll(e).isEmpty()
         # nxt is materialized (probe) and the exact check — the last
         # reader of the superseded frame — has run: release its blocks.
-        e_handle.unpersist(False)
-        e, e_handle = nxt, nxt_handle
+        release(e)
+        e = nxt
         if stable:
             converged = True
             break
         prev = cur
-    if caches is not None:
-        caches.extend((e_handle, nodes_handle))
     if not converged:
         raise RuntimeError(
             f"cc_star did not reach the edge fixpoint in {max_iter} "

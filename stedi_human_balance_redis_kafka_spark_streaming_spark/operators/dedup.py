@@ -44,7 +44,7 @@ from ..functions.vectors import (
     flatten_sql,
     norm_unrolled_sql,
 )
-from ..session import scope_caches
+from ..session import persist, scoped
 
 
 def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -86,12 +86,12 @@ def _exploded_terms(docs: DataFrame, n: int, text_col: str = "text") -> DataFram
     )
 
 
+@scoped
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float,
     n: int = 1,
     max_shingle_freq: int | None = None,
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via inverted-index self-join.
 
@@ -104,41 +104,34 @@ def ngram_jaccard_pairs(
     quadratic blowup on stop-shingles (a term in f docs contributes f²
     join rows).
 
-    Cache lifecycle: the persisted inverted index is scoped to the
-    returned frame (released when the caller drops it).  Callers that
-    derive new frames from the result and drop the original should pass
-    ``caches`` (a list) and scope the appended entries to the frame they
-    ultimately hold — see plans/registry.dedup_lsh_recall.
+    Cache lifecycle: the persisted inverted index lives as long as the
+    returned frame (session.scoped).
     """
-    own: list[DataFrame] = [] if caches is None else caches
-    scored = _pair_intersections(docs, n, max_shingle_freq, own)
+    scored = _pair_intersections(docs, n, max_shingle_freq)
     jac = F.col("inter").cast("double") / (
         F.col("sz_a") + F.col("sz_b") - F.col("inter")
     )
-    ret = scored.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
+    return scored.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
-    return ret if caches is not None else scope_caches(ret, *own)
 
 
+@scoped
 def _pair_intersections(
     docs: DataFrame,
     n: int,
     max_shingle_freq: int | None,
-    own: list[DataFrame],
 ) -> DataFrame:
     """Shared inverted-index self-join core of the set-overlap dedup
     family: (doc_a, doc_b, inter, sz_a, sz_b) for every co-shingled pair
-    (doc_a < doc_b).  The persisted index is appended to ``own`` for
-    caller-scoped release."""
+    (doc_a < doc_b)."""
     # The inverted index is read three times (sizes + both join sides) —
     # persist it (MEMORY_AND_DISK) and materialize eagerly: AQE runs the
     # branches as concurrent query stages that would all miss a lazy
     # cache and recompute the lineage.  At cluster scale this is the
     # materialize-the-index step of any shingle pipeline.
-    e = _exploded_terms(docs, n).persist()
+    e = persist(_exploded_terms(docs, n))
     e.count()
-    own.append(e)
     if max_shingle_freq is not None:
         # Anti-join against the STOP-shingle set (df > cap) — the small
         # side by construction (heavy hitters are few), so AQE broadcasts
@@ -169,12 +162,12 @@ def _pair_intersections(
     return inter.join(sz_a, "doc_a").join(sz_b, "doc_b")
 
 
+@scoped
 def ngram_containment_pairs(
     docs: DataFrame,
     threshold_e6: int = 800_000,
     n: int = 3,
     max_shingle_freq: int | None = None,
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """ASYMMETRIC set-overlap (containment) near-dup pairs: documents
     where the smaller shingle set is mostly inside the larger one —
@@ -191,13 +184,11 @@ def ngram_containment_pairs(
     inverted-index self-join core, same stop-shingle cap bounding the
     f² blowup); only the final ratio differs.
     """
-    own: list[DataFrame] = [] if caches is None else caches
-    scored = _pair_intersections(docs, n, max_shingle_freq, own)
+    scored = _pair_intersections(docs, n, max_shingle_freq)
     cont = F.expr("(inter * 1000000L) div least(sz_a, sz_b)")
-    ret = scored.select(
+    return scored.select(
         "doc_a", "doc_b", cont.cast("long").alias("containment_e6")
     ).filter(F.col("containment_e6") >= threshold_e6)
-    return ret if caches is not None else scope_caches(ret, *own)
 
 
 def minhash_band_index(
@@ -236,13 +227,13 @@ def minhash_band_index(
     return sig.select("doc_id", F.explode(F.array(*band_keys)).alias("bkey"))
 
 
+@scoped
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.7,
     shingle_n: int = 3,
     num_hashes: int = 8,
     num_bands: int = 4,
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs: shingle → signature → band-bucket join
     → exact-Jaccard verification of candidates.
@@ -266,17 +257,15 @@ def minhash_lsh_pairs(
     # downstream branches execute as concurrent query stages, which all
     # MISS a lazily-filled cache and recompute the full
     # scan+explode+window+distinct lineage (measured 3-5× the runtime).
-    own: list[DataFrame] = [] if caches is None else caches
-    e = _exploded_terms(docs, shingle_n).persist()
+    e = persist(_exploded_terms(docs, shingle_n))
     e.count()
-    own.append(e)
     # Candidate generation: plain shuffle self-join on the band key.  No
     # broadcast hint — both sides are the full corpus's band table, which
     # grows with the corpus; the bucket join hash-partitions on bkey and
     # stays linear in (corpus + bucket collisions).
     bands = minhash_band_index(e, num_hashes, num_bands)
     a, b = bands.alias("a"), bands.alias("b")
-    cand = (
+    cand = persist(
         a.join(
             b,
             (F.col("a.bkey") == F.col("b.bkey"))
@@ -292,12 +281,9 @@ def minhash_lsh_pairs(
         # 185 s unpersisted vs ~30 s persisted at sf0.1).  Candidates are
         # LSH-collision-bounded — orders of magnitude smaller than the
         # corpus — so this cache is scale-safe.
-        .persist()
     )
     cand.count()
-    own.append(cand)
-    ret = _verify_jaccard(e, cand, threshold)
-    return ret if caches is not None else scope_caches(ret, *own)
+    return _verify_jaccard(e, cand, threshold)
 
 
 def _verify_jaccard(
@@ -343,11 +329,11 @@ def _verify_jaccard(
     )
 
 
+@scoped
 def ngram_jaccard_prefix_pairs(
     docs: DataFrame,
     threshold: float = 0.7,
     n: int = 3,
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """EXACT n-gram Jaccard pairs via PPJoin-style PREFIX FILTERING —
     the third candidate generator next to the full inverted-index
@@ -379,15 +365,11 @@ def ngram_jaccard_prefix_pairs(
     follows the S-curve).  Output: (doc_a, doc_b, jaccard ≥ threshold),
     doc_a < doc_b.
     """
-    own: list[DataFrame] = [] if caches is None else caches
-    e = _exploded_terms(docs, n).persist()
+    e = persist(_exploded_terms(docs, n))
     e.count()
-    own.append(e)
-    cand = prefix_candidates(e, threshold).persist()
+    cand = persist(prefix_candidates(e, threshold))
     cand.count()
-    own.append(cand)
-    ret = _verify_jaccard(e, cand, threshold)
-    return ret if caches is not None else scope_caches(ret, *own)
+    return _verify_jaccard(e, cand, threshold)
 
 
 def prefix_candidates(e: DataFrame, threshold: float) -> DataFrame:
@@ -567,6 +549,7 @@ def embedding_cosine_pairs(
     )
 
 
+@scoped
 def embedding_bucketed_pairs(
     emb: DataFrame,
     threshold: float,
@@ -693,6 +676,7 @@ def srp_weights(
     ]
 
 
+@scoped
 def srp_lsh_pairs(
     emb: DataFrame,
     threshold: float,
@@ -702,7 +686,6 @@ def srp_lsh_pairs(
     quant: int = 1_000_000,
     round_digits: int = 6,
     salt: str = "srp",
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Cosine near-dup pairs via SIGNED RANDOM PROJECTION (hyperplane)
     LSH — the data-independent alternative to the trained IVF index of
@@ -759,12 +742,10 @@ def srp_lsh_pairs(
     par = emb.sparkSession.sparkContext.defaultParallelism
     # The flattened frame feeds the signature stage AND both verify
     # sides, and the signature frame feeds both sides of the band
-    # self-join — persist each once (caches out-param, the
-    # minhash_lsh_pairs convention) instead of recompiling the
+    # self-join — persist each once (the minhash_lsh_pairs
+    # convention) instead of recompiling the
     # dim-wide projections per branch (measured ~3x on the eval).
-    own: list[DataFrame] = [] if caches is None else caches
-    e = e.repartition(par).persist()
-    own.append(e)
+    e = persist(e.repartition(par))
     # Signature via a BROADCAST weights join + higher-order fold, not a
     # num_hyperplanes×dim unrolled projection: the unrolled form was a
     # ~1,000-term expression whose whole-stage-codegen compile dominated
@@ -791,7 +772,7 @@ def srp_lsh_pairs(
             " 0L, (acc, x) -> acc + x)"
         ).alias("dot"),
     )
-    sig = (
+    sig = persist(
         dots.groupBy(
             "vec_id", F.expr(f"cast(h div {r} as int)").alias("band")
         )
@@ -801,9 +782,7 @@ def srp_lsh_pairs(
                        f" ELSE 0L END")
             ).alias("bkey")
         )
-        .persist()
     )
-    own.append(sig)
     a, b = sig.alias("a"), sig.alias("b")
     cand = (
         a.join(
@@ -823,13 +802,12 @@ def srp_lsh_pairs(
         flat_dot("ea.d", "eb.d", dim) / (F.col("ea.nrm") * F.col("eb.nrm")),
         round_digits,
     )
-    ret = (
+    return (
         cand.join(ea, F.col("vec_a") == F.col("ea.vec_id"))
         .join(eb, F.col("vec_b") == F.col("eb.vec_id"))
         .select("vec_a", "vec_b", cos.alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )
-    return ret if caches is not None else scope_caches(ret, *own)
 
 
 def _snm_key(text_col: str, key_chars: int, token_sorted: bool = False):
@@ -868,11 +846,11 @@ def _snm_candidates_global(keyed: DataFrame, window: int) -> DataFrame:
     ).filter(F.col("other").isNotNull())
 
 
+@scoped
 def _snm_candidates_sharded(
     keyed: DataFrame,
     window: int,
     shards: int | None,
-    own: list[DataFrame],
 ) -> DataFrame:
     """Range-partitioned SNM candidate stream — the 100 TB form of the
     global-window path, exactly equal to it (property-tested):
@@ -895,23 +873,21 @@ def _snm_candidates_sharded(
        distance: no pair is missed, no false pair survives the rank
        filter.  Same-shard duplicates fall to the caller's distinct.
 
-    The shard-local frame is persisted (appended to ``own``) before
-    reuse: ``repartitionByRange`` samples boundaries, so the pinned
-    copy guarantees the offset/lead/boundary reads all see ONE
+    The shard-local frame is persisted before reuse:
+    ``repartitionByRange`` samples boundaries, so the pinned copy
+    guarantees the offset/lead/boundary reads all see ONE
     partitioning.
     """
     spark = keyed.sparkSession
     if shards is None:
         shards = int(spark.conf.get("spark.sql.shuffle.partitions"))
     wp = Window.partitionBy("__pid").orderBy("bkey", "doc_id")
-    local = (
+    local = persist(
         keyed.repartitionByRange(shards, "bkey", "doc_id")
         .withColumn("__pid", F.spark_partition_id())
         .withColumn("__lrn", F.row_number().over(wp))
-        .persist()
     )
     local.count()
-    own.append(local)
     in_leads = local.select(
         "doc_id",
         *[
@@ -980,6 +956,7 @@ def _snm_candidates_sharded(
     return in_pairs.unionByName(b_pairs)
 
 
+@scoped
 def sorted_neighborhood_pairs(
     docs: DataFrame,
     threshold: float = 0.7,
@@ -989,7 +966,6 @@ def sorted_neighborhood_pairs(
     text_col: str = "text",
     shards: int | None = None,
     sharded: bool = True,
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Sorted-neighborhood (SNM) near-dup pairs — the fourth classic
     blocking strategy next to the inverted-index join (exact,
@@ -1019,32 +995,28 @@ def sorted_neighborhood_pairs(
     (:func:`sorted_neighborhood_multipass_pairs`) raises recall with a
     second, token-sorted key.
     """
-    own: list[DataFrame] = [] if caches is None else caches
     keyed = docs.select(
         "doc_id", _snm_key(text_col, key_chars).alias("bkey")
     )
     raw = (
-        _snm_candidates_sharded(keyed, window, shards, own)
+        _snm_candidates_sharded(keyed, window, shards)
         if sharded
         else _snm_candidates_global(keyed, window)
     )
-    cand = (
+    cand = persist(
         raw.select(
             F.least("doc_id", "other").alias("doc_a"),
             F.greatest("doc_id", "other").alias("doc_b"),
         )
         .distinct()
-        .persist()
     )
     cand.count()
-    own.append(cand)
-    e = _exploded_terms(docs, n, text_col).persist()
+    e = persist(_exploded_terms(docs, n, text_col))
     e.count()
-    own.append(e)
-    ret = _verify_jaccard(e, cand, threshold)
-    return ret if caches is not None else scope_caches(ret, *own)
+    return _verify_jaccard(e, cand, threshold)
 
 
+@scoped
 def sorted_neighborhood_multipass_pairs(
     docs: DataFrame,
     threshold: float = 0.7,
@@ -1053,7 +1025,6 @@ def sorted_neighborhood_multipass_pairs(
     key_chars: int = 24,
     text_col: str = "text",
     shards: int | None = None,
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Multi-pass SNM: run the sorted-neighborhood candidate stage
     TWICE with independent blocking keys — the raw normalized prefix
@@ -1072,32 +1043,28 @@ def sorted_neighborhood_multipass_pairs(
     Output: (doc_a, doc_b, jaccard ≥ threshold), doc_a < doc_b — a
     superset of the single-pass result at identical parameters.
     """
-    own: list[DataFrame] = [] if caches is None else caches
     k1 = docs.select("doc_id", _snm_key(text_col, key_chars).alias("bkey"))
     k2 = docs.select(
         "doc_id",
         _snm_key(text_col, key_chars, token_sorted=True).alias("bkey"),
     )
-    raw = _snm_candidates_sharded(k1, window, shards, own).unionByName(
-        _snm_candidates_sharded(k2, window, shards, own)
+    raw = _snm_candidates_sharded(k1, window, shards).unionByName(
+        _snm_candidates_sharded(k2, window, shards)
     )
-    cand = (
+    cand = persist(
         raw.select(
             F.least("doc_id", "other").alias("doc_a"),
             F.greatest("doc_id", "other").alias("doc_b"),
         )
         .distinct()
-        .persist()
     )
     cand.count()
-    own.append(cand)
-    e = _exploded_terms(docs, n, text_col).persist()
+    e = persist(_exploded_terms(docs, n, text_col))
     e.count()
-    own.append(e)
-    ret = _verify_jaccard(e, cand, threshold)
-    return ret if caches is not None else scope_caches(ret, *own)
+    return _verify_jaccard(e, cand, threshold)
 
 
+@scoped
 def minhash_lsh_incremental_pairs(
     corpus: DataFrame,
     batch: DataFrame,
@@ -1106,7 +1073,6 @@ def minhash_lsh_incremental_pairs(
     num_hashes: int = 8,
     num_bands: int = 4,
     text_col: str = "text",
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Ingest-time INCREMENTAL MinHash-LSH dedup: near-dup pairs that
     involve at least one NEW document — batch×corpus and batch×batch,
@@ -1138,23 +1104,19 @@ def minhash_lsh_incremental_pairs(
     stage semi-joins shingle sets down to candidate docs before any
     collect_set.  No corpus×corpus candidate is ever generated.
     """
-    own: list[DataFrame] = [] if caches is None else caches
     # Both exploded indexes feed TWO consumers (bands + verify) running
     # as concurrent AQE query stages — persist and materialize eagerly
     # or each consumer recomputes the scan+explode+window lineage (the
     # measured 3-5× miss of the one-shot path's comment).  In
     # production the corpus index is the persisted warehouse artifact;
     # this cache stands in for that read.
-    e_c = _exploded_terms(corpus, shingle_n, text_col).persist()
+    e_c = persist(_exploded_terms(corpus, shingle_n, text_col))
     e_c.count()
-    own.append(e_c)
-    e_b = _exploded_terms(batch, shingle_n, text_col).persist()
+    e_b = persist(_exploded_terms(batch, shingle_n, text_col))
     e_b.count()
-    own.append(e_b)
     bands_c = minhash_band_index(e_c, num_hashes, num_bands)
-    bands_b = minhash_band_index(e_b, num_hashes, num_bands).persist()
+    bands_b = persist(minhash_band_index(e_b, num_hashes, num_bands))
     bands_b.count()
-    own.append(bands_b)
     nb, cb = bands_b.alias("nb"), bands_c.alias("cb")
     cross = (
         nb.join(cb, F.col("nb.bkey") == F.col("cb.bkey"))
@@ -1179,27 +1141,25 @@ def minhash_lsh_incremental_pairs(
             F.lit(False).alias("vs_corpus"),
         )
     )
-    cand = cross.unionByName(intra).distinct().persist()
+    cand = persist(cross.unionByName(intra).distinct())
     cand.count()
-    own.append(cand)
     pairs = cand.select("doc_a", "doc_b")
     # Verify needs shingle sets for candidate docs from BOTH sides; the
     # union is lazy and the semi-join inside _verify_jaccard prunes it
     # to candidate docs before the expensive collect_set.
     e_all = e_b.unionByName(e_c)
     verified = _verify_jaccard(e_all, pairs, threshold)
-    ret = verified.join(cand, ["doc_a", "doc_b"]).select(
+    return verified.join(cand, ["doc_a", "doc_b"]).select(
         "doc_a", "doc_b", "jaccard", "vs_corpus"
     )
-    return ret if caches is not None else scope_caches(ret, *own)
 
 
+@scoped
 def edit_distance_pairs(
     docs: DataFrame,
     max_dist: int = 8,
     q: int = 3,
     text_col: str = "text",
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """EXACT edit-distance near-dup pairs — the character-level blocking
     family next to the token-level ones (Jaccard/containment, MinHash,
@@ -1237,7 +1197,6 @@ def edit_distance_pairs(
     """
     if max_dist < 0 or q < 1:
         raise ValueError(f"need max_dist >= 0 and q >= 1, got {max_dist}/{q}")
-    own: list[DataFrame] = [] if caches is None else caches
     prefix_occ = max_dist * q + 1
     short_max = max_dist * q + q - 1
     t = F.col(text_col)
@@ -1254,7 +1213,7 @@ def edit_distance_pairs(
     ).groupBy("doc_id", "ln", "gram").agg(F.count("*").alias("cnt"))
     dfreq = grams.groupBy("gram").agg(F.sum("cnt").alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "gram")
-    pref = (
+    pref = persist(
         grams.join(dfreq, "gram")
         .withColumn(
             "__before",
@@ -1267,10 +1226,8 @@ def edit_distance_pairs(
         )
         .filter(F.col("__before") < prefix_occ)
         .select("doc_id", "ln", "gram")
-        .persist()
     )
     pref.count()
-    own.append(pref)
     a, b = pref.alias("a"), pref.alias("b")
     cand_gram = (
         a.join(
@@ -1313,9 +1270,8 @@ def edit_distance_pairs(
             F.greatest("id_l", "id_r").alias("doc_b"),
         )
     )
-    cand = cand_gram.unionByName(cand_short).distinct().persist()
+    cand = persist(cand_gram.unionByName(cand_short).distinct())
     cand.count()
-    own.append(cand)
     ta = base.select(F.col("doc_id").alias("doc_a"), F.col("__t").alias("__ta"))
     tb = base.select(F.col("doc_id").alias("doc_b"), F.col("__t").alias("__tb"))
     # THRESHOLDED levenshtein (Spark 3.5+): Ukkonen-banded O(d·n) DP
@@ -1324,7 +1280,7 @@ def edit_distance_pairs(
     # (measured 20.8 s → 3 s for the sf0.1 verify stage), and the char
     # prefix filter is looser than the token one (tiny trigram alphabet
     # ⇒ even rare grams collide), so the verify carries real volume.
-    ret = (
+    return (
         cand.join(ta, "doc_a")
         .join(tb, "doc_b")
         .select(
@@ -1336,7 +1292,6 @@ def edit_distance_pairs(
         )
         .filter(F.col("edit_dist") >= 0)
     )
-    return ret if caches is not None else scope_caches(ret, *own)
 
 
 def _validate_substring_params(
@@ -1353,11 +1308,11 @@ def _validate_substring_params(
         raise ValueError(f"max_gram_occ must be >= 2, got {max_gram_occ}")
 
 
+@scoped
 def _raw_substring_grams(
     docs: DataFrame,
     k: int,
     text_col: str,
-    own: list[DataFrame],
 ) -> DataFrame:
     """The UNCAPPED gram stage shared by :func:`_capped_substring_grams`
     and :func:`substring_incremental_runs` (whose occurrence floor/cap
@@ -1365,7 +1320,7 @@ def _raw_substring_grams(
     alone): every length-``k`` token gram of every document with its
     0-based position, md5-keyed — posexplode + (k−1)-lead window, the
     codegen'd form (see the capped wrapper's docstring for the
-    measured HOF comparison).  Persisted into ``own``."""
+    measured HOF comparison).  Persisted."""
     toks = docs.filter(F.col(text_col).isNotNull()).select(
         "doc_id", tokens(F.col(text_col)).alias("t")
     )
@@ -1374,7 +1329,7 @@ def _raw_substring_grams(
     parts = [F.col("tok")] + [
         F.lead("tok", j).over(wdoc) for j in range(1, k)
     ]
-    grams = (
+    grams = persist(
         pe.select(
             "doc_id",
             F.col("pos").cast("long").alias("pos"),
@@ -1383,18 +1338,16 @@ def _raw_substring_grams(
         )
         .filter(F.col("__full").isNotNull())
         .select("doc_id", "pos", "g")
-        .persist()
     )
-    own.append(grams)
     return grams
 
 
+@scoped
 def _capped_substring_grams(
     docs: DataFrame,
     k: int,
     max_gram_occ: int,
     text_col: str,
-    own: list[DataFrame],
     min_occ: int = 2,
 ) -> DataFrame:
     """The shared gram stage of the substring-dedup family
@@ -1416,11 +1369,10 @@ def _capped_substring_grams(
     null — the tokens array itself has no null elements).
 
     The gram frame feeds the occurrence count, the semi-join probe
-    side, AND both sides of the pair self-join — persisted once into
-    ``own`` (the caches out-param convention) instead of re-running
-    the k-lead window four times.
+    side, AND both sides of the pair self-join — persisted once
+    instead of re-running the k-lead window four times.
     """
-    grams = _raw_substring_grams(docs, k, text_col, own)
+    grams = _raw_substring_grams(docs, k, text_col)
     keep = (
         grams.groupBy("g")
         .agg(F.count("*").alias("__occ"))
@@ -1433,6 +1385,7 @@ def _capped_substring_grams(
     return grams.join(keep, "g", "left_semi")
 
 
+@scoped
 def substring_run_pairs(
     docs: DataFrame,
     *,
@@ -1440,7 +1393,6 @@ def substring_run_pairs(
     min_tokens: int | None = None,
     max_gram_occ: int = 200,
     text_col: str = "text",
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """MAXIMAL cross-document exact-substring runs at ARBITRARY token
     boundaries — the "50-token verbatim overlap" duplicate class of
@@ -1498,8 +1450,7 @@ def substring_run_pairs(
     _validate_substring_params(k, min_tokens, max_gram_occ)
     if min_tokens is None:
         min_tokens = k
-    own: list[DataFrame] = [] if caches is None else caches
-    g2 = _capped_substring_grams(docs, k, max_gram_occ, text_col, own)
+    g2 = _capped_substring_grams(docs, k, max_gram_occ, text_col)
     a, b = g2.alias("a"), g2.alias("b")
     pairs = a.join(
         b,
@@ -1516,7 +1467,7 @@ def substring_run_pairs(
     isl = pairs.withColumn(
         "grp", F.col("pa") - F.row_number().over(w)
     )
-    ret = (
+    return (
         isl.groupBy("doc_a", "doc_b", "diag", "grp")
         .agg(
             F.min("pa").alias("a_start"),
@@ -1526,9 +1477,9 @@ def substring_run_pairs(
         .filter(F.col("match_tokens") >= min_tokens)
         .select("doc_a", "doc_b", "a_start", "b_start", "match_tokens")
     )
-    return ret if caches is not None else scope_caches(ret, *own)
 
 
+@scoped
 def substring_self_run_pairs(
     docs: DataFrame,
     *,
@@ -1536,7 +1487,6 @@ def substring_self_run_pairs(
     min_tokens: int | None = None,
     max_gram_occ: int = 200,
     text_col: str = "text",
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """MAXIMAL INTRA-document exact-substring runs — the self-pair
     variant of :func:`substring_run_pairs`: a document that verbatim-
@@ -1577,8 +1527,7 @@ def substring_self_run_pairs(
     _validate_substring_params(k, min_tokens, max_gram_occ)
     if min_tokens is None:
         min_tokens = k
-    own: list[DataFrame] = [] if caches is None else caches
-    g2 = _capped_substring_grams(docs, k, max_gram_occ, text_col, own)
+    g2 = _capped_substring_grams(docs, k, max_gram_occ, text_col)
     a, b = g2.alias("a"), g2.alias("b")
     pairs = a.join(
         b,
@@ -1593,7 +1542,7 @@ def substring_self_run_pairs(
     )
     w = Window.partitionBy("doc_id", "diag").orderBy("pa")
     isl = pairs.withColumn("grp", F.col("pa") - F.row_number().over(w))
-    ret = (
+    return (
         isl.groupBy("doc_id", "diag", "grp")
         .agg(
             F.min("pa").alias("a_start"),
@@ -1603,7 +1552,6 @@ def substring_self_run_pairs(
         .filter(F.col("match_tokens") >= min_tokens)
         .select("doc_id", "a_start", "b_start", "match_tokens")
     )
-    return ret if caches is not None else scope_caches(ret, *own)
 
 
 def stitch_flag_runs(
@@ -1680,6 +1628,7 @@ def stitch_flag_runs(
     )
 
 
+@scoped
 def substring_gram_index(
     index_docs: DataFrame,
     *,
@@ -1711,16 +1660,14 @@ def substring_gram_index(
     path, read it back as the probe's ``index=``.
     """
     _validate_substring_params(k, None, max_gram_occ)
-    own: list[DataFrame] = []
     g2 = _capped_substring_grams(
-        index_docs, k, max_gram_occ, text_col, own, min_occ=1
+        index_docs, k, max_gram_occ, text_col, min_occ=1
     )
-    ret = g2.select(
+    return g2.select(
         F.col("doc_id").alias("index_doc_id"),
         F.col("pos").alias("index_pos"),
         "g",
     )
-    return scope_caches(ret, *own)
 
 
 def substring_gram_counts(index: DataFrame) -> DataFrame:
@@ -1748,6 +1695,7 @@ def substring_gram_counts(index: DataFrame) -> DataFrame:
     )
 
 
+@scoped
 def substring_incremental_runs(
     new_docs: DataFrame,
     index: DataFrame,
@@ -1756,7 +1704,6 @@ def substring_incremental_runs(
     min_tokens: int | None = None,
     max_gram_occ: int = 200,
     text_col: str = "text",
-    caches: list[DataFrame] | None = None,
     index_counts: DataFrame | None = None,
 ) -> DataFrame:
     """INCREMENTAL exact-substring mining — a NEW document drop mined
@@ -1825,8 +1772,7 @@ def substring_incremental_runs(
     _validate_substring_params(k, min_tokens, max_gram_occ)
     if min_tokens is None:
         min_tokens = k
-    own: list[DataFrame] = [] if caches is None else caches
-    new_g = _raw_substring_grams(new_docs, k, text_col, own)
+    new_g = _raw_substring_grams(new_docs, k, text_col)
     idx = index.select(
         F.col("index_doc_id").alias("doc_id"),
         F.col("index_pos").cast("long").alias("pos"),
@@ -1852,8 +1798,7 @@ def substring_incremental_runs(
         )
         .select("g")
     )
-    ng = new_g.join(keep, "g", "left_semi").persist()
-    own.append(ng)
+    ng = persist(new_g.join(keep, "g", "left_semi"))
     ig = idx.join(keep, "g", "left_semi")
     n_, i_ = ng.alias("n"), ig.alias("i")
     cross = (
@@ -1896,7 +1841,7 @@ def substring_incremental_runs(
     isl = pairs.withColumn("grp", F.col("pa") - F.row_number().over(w))
     # a (doc_a, doc_b) pair belongs to exactly ONE leg (the id sets are
     # disjoint), so the booleans are constant per group key
-    ret = (
+    return (
         isl.groupBy(
             "doc_a", "doc_b", "a_is_new", "b_is_new", "diag", "grp"
         )
@@ -1916,7 +1861,6 @@ def substring_incremental_runs(
             "b_is_new",
         )
     )
-    return ret if caches is not None else scope_caches(ret, *own)
 
 
 def substring_cut_spans(

@@ -19,9 +19,12 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import checkpoint, persist, release, scoped
+
 RANK_QUANT = 1_000_000_000_000  # 1e12 — rank units
 
 
+@scoped
 def pagerank(
     edges: DataFrame,
     *,
@@ -33,7 +36,6 @@ def pagerank(
     validate: bool = True,
     weight: str | None = None,
     seeds: DataFrame | None = None,
-    caches: list | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
 
@@ -106,16 +108,15 @@ def pagerank(
             f"dangling must be 'error' or 'redistribute', got {dangling!r}"
         )
     if weight is None:
-        e = (
+        e = persist(
             edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
             .distinct()
-            .persist()
         )
-        deg = e.groupBy("src").agg(F.count("*").alias("deg")).persist()
+        deg = persist(e.groupBy("src").agg(F.count("*").alias("deg")))
         msg_expr = "rank_e12 div deg"
     else:
         # multigraph collapse: parallel edges sum their weights
-        e = (
+        e = persist(
             edges.select(
                 F.col(src).alias("src"),
                 F.col(dst).alias("dst"),
@@ -123,16 +124,14 @@ def pagerank(
             )
             .groupBy("src", "dst")
             .agg(F.sum("w").alias("w"))
-            .persist()
         )
         if validate:
             bad = e.filter(F.col("w") <= 0).limit(1).count()
             if bad:
-                e.unpersist()
                 raise ValueError(
                     "pagerank: edge weights must be positive integers"
                 )
-        deg = e.groupBy("src").agg(F.sum("w").alias("deg")).persist()
+        deg = persist(e.groupBy("src").agg(F.sum("w").alias("deg")))
         msg_expr = "(cast(rank_e12 as decimal(38,0)) * w) div deg"
     deg.count()  # materialize both caches before the rounds read them
     if dangling == "error":
@@ -152,8 +151,6 @@ def pagerank(
                 .count()
             )
             if n_dangling:
-                e.unpersist()
-                deg.unpersist()
                 raise ValueError(
                     "pagerank: edge list has destination-only (dangling) "
                     "nodes; every node must appear as a source — "
@@ -161,26 +158,24 @@ def pagerank(
                     "or use dangling='redistribute'"
                 )
         nodes = deg.select(F.col("src").alias("node"))
-        n_nodes = None
+        n_nodes = node_cache = None
     else:
-        nodes = (
+        nodes = persist(
             e.select(F.col("src").alias("node"))
             .unionByName(e.select(F.col("dst").alias("node")))
             .distinct()
-            .persist()
         )
+        node_cache = nodes
         n_nodes = nodes.count()  # one-time bounded build scalar
         if n_nodes == 0:
             # Empty graph: short-circuit before the per-round sink-share
             # expression (dmass div 0 would raise under ANSI even with
             # zero rows upstream of the aggregate's single output row).
-            e.unpersist()
-            deg.unpersist()
-            empty = nodes.withColumn(
+            for df in (e, deg, nodes):
+                release(df)
+            return nodes.withColumn(
                 "rank_e12", F.lit(RANK_QUANT).cast("long")
             )
-            nodes.unpersist()
-            return empty
     base = (RANK_QUANT * (100 - damping_pct)) // 100
     seeded = seeds is not None
     if seeded:
@@ -201,16 +196,11 @@ def pagerank(
             F.coalesce(F.sum("__is_seed"), F.lit(0)).alias("k"),
         ).collect()[0]
         if cnt["k"] == 0:
-            e.unpersist()
-            deg.unpersist()
-            if n_nodes is not None:
-                nodes.unpersist()
             raise ValueError(
                 "pagerank: no seed node appears in the edge list"
             )
         seed_base = (base * int(cnt["n"])) // int(cnt["k"])
-        old_nodes = nodes
-        nodes = (
+        nodes = persist(
             tagged.select(
                 "node",
                 F.when(F.col("__is_seed") == 1, F.lit(seed_base))
@@ -218,20 +208,17 @@ def pagerank(
                 .cast("long")
                 .alias("__base"),
             )
-            .persist()
         )
         nodes.count()
-        if n_nodes is not None:
-            old_nodes.unpersist()
+        if node_cache is not None:
+            release(node_cache)
+        node_cache = nodes
     else:
-        # Keep a handle on the PERSISTED frame: unpersist() on the
-        # withColumn-derived plan below would be a silent no-op (no
-        # cache entry matches the derived plan) and leak the blocks.
-        persisted_nodes = nodes if n_nodes is not None else None
+        # node_cache keeps the PERSISTED frame: releasing the
+        # withColumn-derived plan below would free nothing.
         nodes = nodes.withColumn(
             "__base", F.lit(base).cast("long")
         )
-    from ..session import checkpoint_handle
 
     # Loop-invariant hoist (r18, guide §1.2): e ⨝ deg never changes
     # across rounds, yet the loop re-joined (and re-broadcast/
@@ -240,11 +227,11 @@ def pagerank(
     # join + the inbox aggregation.  Costs one extra cached copy of the
     # edge list (one int column wider); at scale it removes one |V|-
     # sized join build per round.
-    ed = e.join(deg, "src").persist()
+    ed = persist(e.join(deg, "src"))
     ranks = nodes.select(
         "node", F.lit(RANK_QUANT).cast("long").alias("rank_e12")
     )
-    handles: list = []
+    rounds: list = []
     zero_dec = "cast(0 as decimal(38,0))"
     for _ in range(iters):
         inbox = (
@@ -284,34 +271,28 @@ def pagerank(
             damped = F.expr(
                 f"({damping_pct} * coalesce(m, {zero_dec})) div 100"
             )
-        ranks = (
+        ranks = checkpoint(
             updated.select(
                 "node",
                 (F.col("__base") + damped).cast("long").alias("rank_e12"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
-        handles.append(checkpoint_handle(ranks))
+        rounds.append(ranks)
     # Materialize the final round before dropping the inputs it reads.
     # The one count() job materializes EVERY round's (lazy) checkpoint
     # bottom-up, so the superseded rounds' blocks are dead right after
     # it — release them synchronously instead of waiting for the
     # ContextCleaner's GC-driven weak refs.
     ranks.count()
-    for h in handles[:-1]:
-        h.unpersist(False)
-    ed.unpersist()
-    e.unpersist()
-    deg.unpersist()
-    if seeded:
-        nodes.unpersist()  # the seeded branch persisted the base frame
-    elif persisted_nodes is not None:
-        persisted_nodes.unpersist()
-    if caches is not None and handles:
-        caches.append(handles[-1])
+    for df in (*rounds[:-1], ed, e, deg):
+        release(df)
+    if node_cache is not None:
+        release(node_cache)
     return ranks
 
 
+@scoped
 def triangle_count(
     edges: DataFrame, *, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
@@ -353,12 +334,10 @@ def triangle_count(
     )
     n_nodes = deg.agg(F.count("*").alias("n_nodes"))
     n_edges = und.agg(F.count("*").alias("n_edges"))
-    from ..session import scope_caches
-
-    out = n_nodes.crossJoin(n_edges).crossJoin(tri)
-    return scope_caches(out, und, o)
+    return n_nodes.crossJoin(n_edges).crossJoin(tri)
 
 
+@scoped
 def _oriented(
     edges: DataFrame, src: str, dst: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -367,16 +346,14 @@ def _oriented(
     (self-loops dropped, duplicates collapsed, u < v), ``deg`` its
     per-node degrees, and ``o`` every edge oriented from its lower
     endpoint under the (degree ASC, node ASC) total order.  ``und``
-    and ``o`` are persisted and materialized — callers own their
-    release (scope_caches)."""
+    and ``o`` are persisted and materialized."""
     a, b = F.col(src), F.col(dst)
-    und = (
+    und = persist(
         edges.select(
             F.least(a, b).alias("u"), F.greatest(a, b).alias("v")
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .persist()
     )
     und.count()
     deg = (
@@ -390,19 +367,19 @@ def _oriented(
     lower_first = F.expr(
         "deg_u < deg_v OR (deg_u = deg_v AND u < v)"
     )
-    o = (
+    o = persist(
         und.join(da, "u")
         .join(db, "v")
         .select(
             F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("s"),
             F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("t"),
         )
-        .persist()
     )
     o.count()
     return und, deg, o
 
 
+@scoped
 def clustering_coefficient(
     edges: DataFrame, *, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
@@ -444,7 +421,7 @@ def clustering_coefficient(
         .groupBy("node")
         .agg(F.count("*").alias("n_tri"))
     )
-    out = (
+    return (
         deg.join(per_node, "node", "left")
         .select(
             "node",
@@ -464,11 +441,9 @@ def clustering_coefficient(
             .alias("local_cc"),
         )
     )
-    from ..session import scope_caches
-
-    return scope_caches(out, und, o)
 
 
+@scoped
 def k_core(
     edges: DataFrame,
     k: int = 2,
@@ -523,13 +498,10 @@ def k_core(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    from ..session import checkpoint_handle, scope_caches
 
     def counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
         obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-            eager=True
-        )
+        df = checkpoint(df.observe(obs, F.count(F.lit(1)).alias("n")))
         return df, obs.get["n"]
 
     a, b = F.col(src), F.col(dst)
@@ -541,7 +513,6 @@ def k_core(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    live_handle = checkpoint_handle(active)
     for _ in range(max_iter):
         deg = (
             active.select(F.col("u").alias("node"))
@@ -550,37 +521,35 @@ def k_core(
             .agg(F.count("*").alias("deg"))
         )
         weak = deg.filter(F.col("deg") < k).select("node")
+        prev = active
         active, n_left = counted_checkpoint(
             active.join(weak.withColumnRenamed("node", "u"), "u", "left_anti")
             .join(weak.withColumnRenamed("node", "v"), "v", "left_anti")
         )
         # The eager checkpoint just materialized from the previous
         # round's blocks — release the superseded round synchronously.
-        live_handle.unpersist(False)
-        live_handle = checkpoint_handle(active)
+        release(prev)
         if n_left == n_edges:
             break
         n_edges = n_left
     else:
-        live_handle.unpersist(False)
         raise RuntimeError(
             f"k_core did not converge within max_iter={max_iter} rounds; "
             "raise max_iter (peel depth exceeds the bound)"
         )
-    out = (
+    return (
         active.select(F.col("u").alias("node"))
         .unionByName(active.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count("*").cast("long").alias("core_deg"))
     )
-    return scope_caches(out, live_handle)
 
 
+@scoped
 def _coreness_hindex(
     und: DataFrame,
     *,
     max_iter: int,
-    caches: list | None,
     deg: DataFrame | None = None,
 ) -> DataFrame:
     """h-index fixpoint engine for :func:`coreness` — ``und`` is the
@@ -600,26 +569,21 @@ def _coreness_hindex(
     and no node drops out), lazily checkpointed and materialized by
     the Σc convergence probe (decimal(38,0)-exact; c is monotone
     non-increasing, so an unchanged sum IS the pointwise fixpoint).
-    Superseded rounds release synchronously; the final frame's handle
-    rides ``caches=``.
+    Superseded rounds release synchronously.
     """
-    from ..session import checkpoint_handle, scope_caches
-
-    sym = (
+    sym = persist(
         und.select(F.col("u").alias("a"), F.col("v").alias("b"))
         .unionByName(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .persist()
     )
     sym.count()
-    und.unpersist()  # sym supersedes the caller's canonical edge cache
+    release(und)  # sym supersedes the caller's canonical edge cache
     if deg is None:
         c = sym.groupBy(F.col("a").alias("node")).agg(
             F.count("*").cast("long").alias("c")
         )
     else:
         c = deg.select("node", F.col("deg").cast("long").alias("c"))
-    c = c.localCheckpoint(eager=False)
-    live_handle = checkpoint_handle(c)
+    c = checkpoint(c, eager=False)
 
     def _sum(df: DataFrame):
         return df.agg(
@@ -630,40 +594,33 @@ def _coreness_hindex(
     if deg is not None:
         # c0 is checkpointed (materialized by the probe above) — the
         # shared rollup's cache is no longer referenced
-        deg.unpersist()
+        release(deg)
     converged = False
     rank_w = Window.partitionBy("a").orderBy(F.desc("c"))
     for _ in range(max_iter):
         msgs = sym.join(c, sym["b"] == c["node"]).select("a", "c")
-        new_c = (
+        new_c = checkpoint(
             msgs.withColumn("__rn", F.row_number().over(rank_w))
             .filter(F.col("c") >= F.col("__rn"))
             .groupBy(F.col("a").alias("node"))
-            .agg(F.max("__rn").cast("long").alias("c"))
-            .localCheckpoint(eager=False)
+            .agg(F.max("__rn").cast("long").alias("c")),
+            eager=False,
         )
-        new_handle = checkpoint_handle(new_c)
         new_sum = _sum(new_c)
-        live_handle.unpersist(False)
-        live_handle = new_handle
+        release(c)
         c = new_c
         if new_sum == prev_sum:
             converged = True
             break
         prev_sum = new_sum
-    sym.unpersist()
+    release(sym)
     if not converged:
-        live_handle.unpersist(False)
         raise RuntimeError(
             f"coreness (h-index) did not reach the fixpoint in "
             f"{max_iter} rounds; raise max_iter (or use "
             f"algorithm='peel')"
         )
-    out = c.select("node", F.col("c").alias("coreness"))
-    if caches is not None:
-        caches.append(live_handle)
-        return out
-    return scope_caches(out, live_handle)
+    return c.select("node", F.col("c").alias("coreness"))
 
 
 def _pick_coreness_engine(max_degree: int, threshold: int) -> str:
@@ -677,6 +634,7 @@ def _pick_coreness_engine(max_degree: int, threshold: int) -> str:
     return "peel" if max_degree >= threshold else "hindex"
 
 
+@scoped
 def coreness(
     edges: DataFrame,
     *,
@@ -685,7 +643,6 @@ def coreness(
     max_iter: int = 200,
     algorithm: str = "auto",
     hub_degree_threshold: int = 5_000_000,
-    caches: list | None = None,
 ) -> DataFrame:
     """Full core decomposition: every node's core NUMBER — the largest
     k for which the node survives the k-core peel (k_core gives
@@ -726,8 +683,7 @@ def coreness(
 
     Both RAISE on non-convergence within ``max_iter`` rather than
     returning a partial decomposition, and both release superseded
-    per-round checkpoints synchronously (final frames ride the
-    ``caches=`` seam).
+    per-round checkpoints synchronously.
     """
     if algorithm not in ("auto", "hindex", "peel"):
         raise ValueError(
@@ -735,43 +691,36 @@ def coreness(
             f"{algorithm!r}"
         )
     a, b = F.col(src), F.col(dst)
-    und = (
+    und = persist(
         edges.select(
             F.least(a, b).alias("u"),
             F.greatest(a, b).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .persist()
     )
     und.count()
-    from ..session import checkpoint_handle, scope_caches
 
     if algorithm == "auto":
         # ONE degree rollup serves both the engine probe and (for the
         # h-index engine) c₀ — previously the probe's full-edge-list
         # shuffle was thrown away and recomputed as c₀ (r19, the guard
         # deg-sharing discipline; measured ~1.3 s / 3 jobs at sf0.1).
-        deg = (
+        deg = persist(
             und.select(F.col("u").alias("node"))
             .unionByName(und.select(F.col("v").alias("node")))
             .groupBy("node")
             .agg(F.count("*").alias("deg"))
-            .persist()
         )
         max_deg = deg.agg(F.max("deg")).first()[0]
         algorithm = _pick_coreness_engine(
             int(max_deg or 0), hub_degree_threshold
         )
         if algorithm == "hindex":
-            return _coreness_hindex(
-                und, max_iter=max_iter, caches=caches, deg=deg
-            )
-        deg.unpersist()
+            return _coreness_hindex(und, max_iter=max_iter, deg=deg)
+        release(deg)
     if algorithm == "hindex":
-        return _coreness_hindex(
-            und, max_iter=max_iter, caches=caches
-        )
+        return _coreness_hindex(und, max_iter=max_iter)
 
     def endpoints(df: DataFrame) -> DataFrame:
         return (
@@ -795,9 +744,7 @@ def coreness(
     # weak nonempty ⟺ the endpoint diff is nonempty (removed nodes
     # leave the endpoint set), so the weak count IS the jump probe.
     active = und
-    live_handle = None
     casualty_frames: list[DataFrame] = []
-    casualty_handles: list = []
     k = 2
     converged = False
     for _ in range(max_iter):
@@ -807,9 +754,9 @@ def coreness(
             .groupBy("node")
             .agg(F.count("*").alias("deg"))
         )
-        weak = deg.filter(F.col("deg") < k).select("node").persist()
+        weak = persist(deg.filter(F.col("deg") < k).select("node"))
         if weak.count() == 0:
-            weak.unpersist()
+            release(weak)
             # k-core reached.  Exhausted graph ⇒ done; else JUMP the
             # threshold straight past the core's minimum degree d:
             # every level in (k, d] would peel nothing (all degrees
@@ -822,34 +769,25 @@ def coreness(
                 break
             k = int(min_deg) + 1
             continue
-        new_active = (
+        new_active = checkpoint(
             active.join(
                 weak.withColumnRenamed("node", "u"), "u", "left_anti"
             )
             .join(weak.withColumnRenamed("node", "v"), "v", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        new_handle = checkpoint_handle(new_active)
-        fallen = (
+        fallen = checkpoint(
             endpoints(active)
             .join(endpoints(new_active), "node", "left_anti")
-            .withColumn("coreness", F.lit(k - 1).cast("long"))
-            .localCheckpoint(eager=False)
+            .withColumn("coreness", F.lit(k - 1).cast("long")),
+            eager=False,
         )
-        f_handle = checkpoint_handle(fallen)
         fallen.count()  # materialize before the superseded round frees
         casualty_frames.append(fallen)
-        casualty_handles.append(f_handle)
-        if live_handle is not None:
-            live_handle.unpersist(False)
-        live_handle = new_handle
+        if active is not und:
+            release(active)
         active = new_active
-        weak.unpersist()
+        release(weak)
     if not converged:
-        und.unpersist()
-        for h in (*casualty_handles, live_handle):
-            if h is not None:
-                h.unpersist(False)
         raise RuntimeError(
             f"coreness did not exhaust the graph within max_iter="
             f"{max_iter} rounds; raise max_iter"
@@ -864,13 +802,10 @@ def coreness(
         out = casualty_frames[0]
         for f in casualty_frames[1:]:
             out = out.unionByName(f)
-    if live_handle is not None:
+    if active is not und:
         # the (empty) final edge checkpoint has no further readers
-        live_handle.unpersist(False)
-    if caches is not None:
-        caches.extend([und, *casualty_handles])
-        return out
-    return scope_caches(out, und, *casualty_handles)
+        release(active)
+    return out
 
 
 def _edge_support(active: DataFrame) -> DataFrame:
@@ -924,6 +859,7 @@ def _edge_support(active: DataFrame) -> DataFrame:
     )
 
 
+@scoped
 def k_truss(
     edges: DataFrame,
     k: int = 3,
@@ -931,7 +867,6 @@ def k_truss(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 100,
-    caches: list | None = None,
 ) -> DataFrame:
     """k-truss via iterative edge peeling — the EDGE-level cohesion
     primitive completing the graph family (PageRank: centrality, CC:
@@ -959,19 +894,16 @@ def k_truss(
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
     a, b = F.col(src), F.col(dst)
-    und = (
+    und = persist(
         edges.select(
             F.least(a, b).alias("u"), F.greatest(a, b).alias("v")
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .persist()
     )
     und.count()
-    from ..session import checkpoint_handle, scope_caches
 
     active = und
-    live_handle = None
     for _ in range(max_iter):
         sup = _edge_support(active)
         scored = active.join(sup, ["u", "v"], "left").select(
@@ -981,37 +913,26 @@ def k_truss(
             .cast("long")
             .alias("support"),
         )
-        weak = scored.filter(F.col("support") < k - 2).persist()
+        weak = persist(scored.filter(F.col("support") < k - 2))
         if weak.count() == 0:
-            weak.unpersist()
-            out = scored
-            break
-        active = (
+            release(weak)
+            return scored
+        prev = active
+        active = checkpoint(
             active.join(weak.select("u", "v"), ["u", "v"], "left_anti")
-            .localCheckpoint(eager=True)
         )
         # Eager checkpoint materialized — the superseded round's blocks
         # are dead; release synchronously (see k_core).
-        new_handle = checkpoint_handle(active)
-        if live_handle is not None:
-            live_handle.unpersist(False)
-        live_handle = new_handle
-        weak.unpersist()
-    else:
-        und.unpersist()
-        if live_handle is not None:
-            live_handle.unpersist(False)
-        raise RuntimeError(
-            f"k_truss did not converge within max_iter={max_iter} rounds; "
-            "raise max_iter (peel depth exceeds the bound)"
-        )
-    final = [live_handle] if live_handle is not None else []
-    if caches is not None:
-        caches.extend([und, *final])
-        return out
-    return scope_caches(out, und, *final)
+        if prev is not und:
+            release(prev)
+        release(weak)
+    raise RuntimeError(
+        f"k_truss did not converge within max_iter={max_iter} rounds; "
+        "raise max_iter (peel depth exceeds the bound)"
+    )
 
 
+@scoped
 def label_propagation(
     edges: DataFrame,
     *,
@@ -1019,7 +940,6 @@ def label_propagation(
     dst: str = "dst",
     iters: int = 4,
     telemetry: list | None = None,
-    caches: list | None = None,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (LPA) — the
     graph-family COMMUNITY primitive next to centrality (PageRank),
@@ -1074,7 +994,6 @@ def label_propagation(
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    from ..session import checkpoint_handle, scope_caches
 
     a, b = F.col(src), F.col(dst)
     und = (
@@ -1085,16 +1004,14 @@ def label_propagation(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    sym = (
+    sym = persist(
         und.select(F.col("u").alias("a"), F.col("v").alias("b"))
         .unionByName(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .persist()
     )
     sym.count()
-    lbl = sym.select(F.col("a").alias("node")).distinct().select(
+    lbl = checkpoint(sym.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
-    ).localCheckpoint(eager=True)
-    live_handle = checkpoint_handle(lbl)
+    ))
     rank_w = Window.partitionBy("node").orderBy(
         F.desc("votes"), F.asc("lbl")
     )
@@ -1103,15 +1020,13 @@ def label_propagation(
             F.col("a").alias("node"), "lbl"
         )
         votes = nbr_votes.unionByName(lbl.select("node", "lbl"))
-        new_lbl = (
+        new_lbl = checkpoint(
             votes.groupBy("node", "lbl")
             .agg(F.count("*").alias("votes"))
             .withColumn("__rn", F.row_number().over(rank_w))
             .filter(F.col("__rn") == 1)
             .select("node", "lbl")
-            .localCheckpoint(eager=True)
         )
-        new_handle = checkpoint_handle(new_lbl)
         if telemetry is not None:
             # consecutive-frame diff BEFORE the superseded round's
             # blocks release: one node-keyed join, partial-agg count
@@ -1122,17 +1037,13 @@ def label_propagation(
                 .count()
             )
             telemetry.append(int(moved))
-        live_handle.unpersist(False)
-        live_handle = new_handle
+        release(lbl)
         lbl = new_lbl
-    out = lbl.select("node", F.col("lbl").cast("long").alias("community"))
-    sym.unpersist()
-    if caches is not None:
-        caches.append(live_handle)
-        return out
-    return scope_caches(out, live_handle)
+    release(sym)
+    return lbl.select("node", F.col("lbl").cast("long").alias("community"))
 
 
+@scoped
 def bfs_distances(
     edges: DataFrame,
     sources: DataFrame,
@@ -1141,7 +1052,6 @@ def bfs_distances(
     dst: str = "dst",
     directed: bool = False,
     max_iter: int = 100,
-    caches: list | None = None,
 ) -> DataFrame:
     """Multi-source breadth-first hop distances — the graph-family
     REACHABILITY primitive: the minimum hop count from any source to
@@ -1172,57 +1082,49 @@ def bfs_distances(
     Determinism: pure set arithmetic on exact integers — the SQL
     oracle replays it with a recursive CTE taking MIN(depth) per node.
     """
-    from ..session import checkpoint_handle, scope_caches
-
     a, b = F.col(src), F.col(dst)
     fwd = edges.select(a.alias("a"), b.alias("b"))
     adj = fwd if directed else fwd.unionByName(
         edges.select(b.alias("a"), a.alias("b"))
     )
-    adj = adj.filter(F.col("a") != F.col("b")).distinct().persist()
+    adj = persist(adj.filter(F.col("a") != F.col("b")).distinct())
     adj.count()
-    dist = sources.select(
+    dist = checkpoint(sources.select(
         F.col("node").cast("long").alias("node"),
         F.lit(0).cast("long").alias("dist"),
-    ).distinct().localCheckpoint(eager=True)
-    live_handle = checkpoint_handle(dist)
+    ).distinct())
     frontier = dist.select("node")
     converged = False
     for d in range(1, max_iter + 1):
-        nxt = (
+        nxt = persist(
             frontier.join(adj, frontier["node"] == adj["a"])
             .select(F.col("b").alias("node"))
             .distinct()
             .join(dist.select("node"), "node", "left_anti")
             .select("node", F.lit(d).cast("long").alias("dist"))
-            .persist()
         )
         if nxt.count() == 0:
-            nxt.unpersist()
+            release(nxt)
             converged = True
             break
-        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
-        new_handle = checkpoint_handle(dist)
-        live_handle.unpersist(False)
-        live_handle = new_handle
+        prev = dist
+        dist = checkpoint(dist.unionByName(nxt))
+        release(prev)
         # Read the next frontier out of the checkpoint blocks just
         # materialized, not the about-to-be-released nxt cache.
         frontier = dist.filter(F.col("dist") == d).select("node")
-        nxt.unpersist()
-    adj.unpersist()
+        release(nxt)
+    release(adj)
     if not converged:
-        live_handle.unpersist(False)
         raise RuntimeError(
             f"bfs_distances did not exhaust the frontier within "
             f"max_iter={max_iter} rounds; raise max_iter (graph "
             "diameter exceeds the bound)"
         )
-    if caches is not None:
-        caches.append(live_handle)
-        return dist
-    return scope_caches(dist, live_handle)
+    return dist
 
 
+@scoped
 def shortest_paths(
     edges: DataFrame,
     sources: DataFrame,
@@ -1233,7 +1135,6 @@ def shortest_paths(
     directed: bool = False,
     max_iter: int = 50,
     validate: bool = True,
-    caches: list | None = None,
 ) -> DataFrame:
     """Multi-source weighted shortest paths (Bellman-Ford rounds) —
     the weighted completion of the reachability plane: where
@@ -1265,34 +1166,29 @@ def shortest_paths(
     is truncated per round via ``localCheckpoint`` with synchronous
     release of the superseded round, as in :func:`bfs_distances`.
     """
-    from ..session import checkpoint_handle, scope_caches
-
     a, b, w = F.col(src), F.col(dst), F.col(weight).cast("long")
     fwd = edges.select(a.alias("a"), b.alias("b"), w.alias("w"))
     adj = fwd if directed else fwd.unionByName(
         edges.select(b.alias("a"), a.alias("b"), w.alias("w"))
     )
-    adj = (
+    adj = persist(
         adj.filter(F.col("a") != F.col("b"))
         .groupBy("a", "b")
         .agg(F.min("w").alias("w"))
-        .persist()
     )
     adj.count()
     if validate:
         bad = adj.filter(F.col("w") < 1).limit(1).collect()
         if bad:
-            adj.unpersist()
             raise ValueError(
                 f"shortest_paths requires positive integer weights; found "
                 f"w={bad[0]['w']} on edge ({bad[0]['a']}, {bad[0]['b']})"
             )
-    dist = sources.select(
+    dist = checkpoint(sources.select(
         F.col("node").cast("long").alias("node"),
         F.lit(0).cast("long").alias("dist"),
         F.lit(True).alias("changed"),
-    ).distinct().localCheckpoint(eager=True)
-    live_handle = checkpoint_handle(dist)
+    ).distinct())
     converged = False
     for _ in range(max_iter):
         fr = dist.filter(F.col("changed")).select("node", "dist")
@@ -1310,52 +1206,30 @@ def shortest_paths(
         improved = F.col("od").isNull() | (
             F.col("d").isNotNull() & (F.col("d") < F.col("od"))
         )
-        dist = merged.select(
+        prev = dist
+        dist = checkpoint(merged.select(
             "node",
             F.when(improved, F.col("d"))
             .otherwise(F.col("od"))
             .cast("long")
             .alias("dist"),
             improved.alias("changed"),
-        ).localCheckpoint(eager=True)
-        new_handle = checkpoint_handle(dist)
-        live_handle.unpersist(False)
-        live_handle = new_handle
+        ))
+        release(prev)
         if dist.filter(F.col("changed")).count() == 0:
             converged = True
             break
-    adj.unpersist()
+    release(adj)
     if not converged:
-        live_handle.unpersist(False)
         raise RuntimeError(
             f"shortest_paths did not reach the min-plus fixpoint within "
             f"max_iter={max_iter} rounds; raise max_iter (longest "
             "shortest-path hop count exceeds the bound)"
         )
-    out = dist.select("node", "dist")
-    if caches is not None:
-        caches.append(live_handle)
-        return out
-    return scope_caches(out, live_handle)
+    return dist.select("node", "dist")
 
 
-def _reach_set(
-    adj: DataFrame, seeds: DataFrame, *, max_iter: int
-) -> tuple[DataFrame, list]:
-    """Forward-reachable node set (seed included) over a directed
-    adjacency ``adj(a, b)`` — delegates to :func:`bfs_distances`
-    (hop distances discarded), so the frontier bookkeeping and
-    checkpoint lifecycle are the tested ones.  Returns (nodes frame,
-    handles) — the CALLER releases the handles once every consumer of
-    the frame has materialized."""
-    held: list = []
-    dist = bfs_distances(
-        adj, seeds, src="a", dst="b", directed=True,
-        max_iter=max_iter, caches=held,
-    )
-    return dist.select("node"), held
-
-
+@scoped
 def strongly_connected_components(
     edges: DataFrame,
     *,
@@ -1364,7 +1238,6 @@ def strongly_connected_components(
     max_iter: int = 50,
     bfs_max_iter: int = 100,
     algorithm: str = "auto",
-    caches: list | None = None,
 ) -> DataFrame:
     """Strongly connected components of a DIRECTED graph — the directed
     membership primitive the undirected planes (connected components in
@@ -1446,8 +1319,6 @@ def strongly_connected_components(
     through a recursive-CTE transitive closure — an INDEPENDENT
     algorithm, per the coreness h-index/peel pattern.
     """
-    from ..session import checkpoint_handle, scope_caches
-
     if algorithm not in ("auto", "fwbw", "coloring"):
         raise ValueError(
             f"algorithm must be 'auto', 'fwbw' or 'coloring', got "
@@ -1455,13 +1326,11 @@ def strongly_connected_components(
         )
     engine = algorithm
     a, b = F.col(src), F.col(dst)
-    remaining = (
+    remaining = checkpoint(
         edges.select(a.alias("a"), b.alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    live_handle = checkpoint_handle(remaining)
     spark = edges.sparkSession
 
     def endpoints(df: DataFrame) -> DataFrame:
@@ -1471,16 +1340,14 @@ def strongly_connected_components(
             .distinct()
         )
 
-    nodes0 = endpoints(remaining).localCheckpoint(eager=True)
-    nodes0_handle = checkpoint_handle(nodes0)
+    nodes0 = checkpoint(endpoints(remaining))
     comp_frames: list[DataFrame] = []
-    comp_handles: list = []
     converged = False
     pivot = None
     for _ in range(max_iter):
         # --- TRIM to a fixpoint: in-deg 0 or out-deg 0 ⇒ cycle-free ---
         while True:
-            flags = (
+            flags = persist(
                 remaining.select(
                     F.col("a").alias("node"),
                     F.lit(1).alias("o"),
@@ -1495,7 +1362,6 @@ def strongly_connected_components(
                 )
                 .groupBy("node")
                 .agg(F.max("o").alias("o"), F.max("i").alias("i"))
-                .persist()
             )
             trimmable = (F.col("o") == 0) | (F.col("i") == 0)
             stats = flags.agg(
@@ -1504,32 +1370,29 @@ def strongly_connected_components(
                 F.min("node").alias("mn"),
             ).first()
             if stats["n"] == 0:
-                flags.unpersist()
+                release(flags)
                 converged = True
                 break
             if stats["ntrim"] == 0:
                 # trim fixpoint: the next pivot (min remaining id)
                 # rides out of the SAME stats aggregate — no extra job
                 pivot = int(stats["mn"])
-                flags.unpersist()
+                release(flags)
                 break
             trimmed = flags.filter(trimmable).select("node")
-            new_r = (
+            new_r = checkpoint(
                 remaining.join(
                     trimmed.withColumnRenamed("node", "a"), "a", "left_anti"
                 )
                 .join(
                     trimmed.withColumnRenamed("node", "b"), "b", "left_anti"
                 )
-                .localCheckpoint(eager=True)
             )
-            new_h = checkpoint_handle(new_r)
-            live_handle.unpersist(False)
-            remaining, live_handle = new_r, new_h
-            flags.unpersist()
+            release(remaining)
+            remaining = new_r
+            release(flags)
         if converged:
             break
-        held: list = []
         if engine in ("fwbw", "auto"):
             # --- PIVOT: SCC = FWD ∩ BWD, one tagged BFS both sides ---
             # Direction namespace 2n / 2n+1; decode with two's-
@@ -1548,9 +1411,12 @@ def strongly_connected_components(
             seeds = spark.createDataFrame(
                 [(pivot * 2,), (pivot * 2 + 1,)], "node long"
             )
+            # bfs_distances returns its final checkpoint: released
+            # at the round's end, once comp has materialized from it.
             try:
-                reach, held = _reach_set(
-                    tagged, seeds, max_iter=bfs_max_iter
+                reach = bfs_distances(
+                    tagged, seeds, src="a", dst="b", directed=True,
+                    max_iter=bfs_max_iter,
                 )
             except RuntimeError as exc:
                 # The inner reach pass is bounded by THIS caller's
@@ -1558,11 +1424,6 @@ def strongly_connected_components(
                 # its own max_iter parameter — re-raise naming the
                 # knob the caller must actually turn (ADVICE r11),
                 # mirroring the coloring-fixpoint raise below.
-                # bfs_distances released its own checkpoint handle
-                # before raising; release this frame's here.
-                live_handle.unpersist(False)
-                for h in (*comp_handles, nodes0_handle):
-                    h.unpersist(False)
                 raise RuntimeError(
                     f"strongly_connected_components: the pivot "
                     f"reachability pass did not exhaust its frontier "
@@ -1576,12 +1437,11 @@ def strongly_connected_components(
             bwd = reach.filter(F.expr("node & 1") == 1).select(
                 F.expr("shiftright(node, 1)").alias("node")
             )
-            comp = (
+            comp = checkpoint(
                 fwd.join(bwd, "node")
                 .select(
                     "node", F.lit(int(pivot)).cast("long").alias("scc")
                 )
-                .localCheckpoint(eager=True)
             )
             if engine == "auto":
                 # Engine probe (the coreness auto pattern, but
@@ -1603,6 +1463,7 @@ def strongly_connected_components(
                 # already-checkpointed component frame.
                 if 2 * comp.count() < int(stats["n"]):
                     engine = "coloring"
+            done = [reach]
         else:
             # --- COLORING: retire every root SCC in one round ---
             # 1) min-label forward closure: color(v) = min{u : u →* v}.
@@ -1616,14 +1477,13 @@ def strongly_connected_components(
             #    propagation peak instead of re-scanning every node
             #    every round.
             nodes_rem = endpoints(remaining)
-            colors = (
+            colors = checkpoint(
                 nodes_rem.select(
                     "node",
                     F.col("node").alias("color"),
                     F.lit(True).alias("changed"),
-                ).localCheckpoint(eager=True)
+                )
             )
-            c_handle = checkpoint_handle(colors)
             colored = False
             for _ in range(bfs_max_iter):
                 frontier = colors.filter(F.col("changed")).select(
@@ -1637,7 +1497,7 @@ def strongly_connected_components(
                     .groupBy("node")
                     .agg(F.min("color").alias("mc"))
                 )
-                new_c = (
+                new_c = checkpoint(
                     colors.join(msgs, "node", "left")
                     .select(
                         "node",
@@ -1649,20 +1509,14 @@ def strongly_connected_components(
                             < F.col("color")
                         ).alias("changed"),
                     )
-                    .localCheckpoint(eager=True)
                 )
-                new_ch = checkpoint_handle(new_c)
                 n_changed = new_c.filter(F.col("changed")).count()
-                c_handle.unpersist(False)
-                colors, c_handle = new_c, new_ch
+                release(colors)
+                colors = new_c
                 if n_changed == 0:
                     colored = True
                     break
             if not colored:
-                c_handle.unpersist(False)
-                live_handle.unpersist(False)
-                for h in (*comp_handles, nodes0_handle):
-                    h.unpersist(False)
                 raise RuntimeError(
                     f"strongly_connected_components: min-label "
                     f"coloring did not reach its fixpoint within "
@@ -1689,20 +1543,15 @@ def strongly_connected_components(
                 .select(F.col("b").alias("a"), F.col("a").alias("b"))
             )
             try:
-                reach, held = _reach_set(
-                    rev_within, roots, max_iter=bfs_max_iter
+                reach = bfs_distances(
+                    rev_within, roots, src="a", dst="b", directed=True,
+                    max_iter=bfs_max_iter,
                 )
             except RuntimeError as exc:
                 # Same re-raise contract as the fwbw pivot pass above
                 # (ADVICE r12): this reach is ALSO bounded by the
                 # caller's bfs_max_iter knob, so frontier exhaustion
-                # must name it — not bfs_distances' internal max_iter —
-                # and release this frame's handles (including the
-                # coloring fixpoint's) before surfacing.
-                c_handle.unpersist(False)
-                live_handle.unpersist(False)
-                for h in (*comp_handles, nodes0_handle):
-                    h.unpersist(False)
+                # must name it — not bfs_distances' internal max_iter.
                 raise RuntimeError(
                     f"strongly_connected_components: the root "
                     f"backward-reach pass (coloring engine) did not "
@@ -1710,30 +1559,23 @@ def strongly_connected_components(
                     f"bfs_max_iter={bfs_max_iter} rounds; raise "
                     f"bfs_max_iter (reach depth exceeds the bound)"
                 ) from exc
-            comp = (
+            comp = checkpoint(
                 reach.join(colors.select("node", "color"), "node")
                 .select("node", F.col("color").cast("long").alias("scc"))
-                .localCheckpoint(eager=True)
             )
-            held.append(c_handle)
+            done = [reach, colors]
         comp_frames.append(comp)
-        comp_handles.append(checkpoint_handle(comp))
-        new_r = (
+        new_r = checkpoint(
             remaining.join(
                 comp.select(F.col("node").alias("a")), "a", "left_anti"
             )
             .join(comp.select(F.col("node").alias("b")), "b", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        new_h = checkpoint_handle(new_r)
-        live_handle.unpersist(False)
-        remaining, live_handle = new_r, new_h
-        for h in held:
-            h.unpersist(False)
-    live_handle.unpersist(False)  # the final (empty) edge checkpoint
+        for df in (remaining, *done):
+            release(df)
+        remaining = new_r
+    release(remaining)  # the final (empty) edge checkpoint
     if not converged:
-        for h in (*comp_handles, nodes0_handle):
-            h.unpersist(False)
         raise RuntimeError(
             f"strongly_connected_components did not exhaust the graph "
             f"within max_iter={max_iter} trim+peel rounds "
@@ -1752,16 +1594,13 @@ def strongly_connected_components(
     else:
         comps = spark.createDataFrame([], "node long, scc long")
         singles = nodes0
-    out = comps.unionByName(
+    return comps.unionByName(
         singles.select("node", F.col("node").cast("long").alias("scc"))
     )
-    handles = [*comp_handles, nodes0_handle]
-    if caches is not None:
-        caches.extend(handles)
-        return out
-    return scope_caches(out, *handles)
 
 
+
+@scoped
 def stress_centrality(
     edges: DataFrame,
     sources: DataFrame,
@@ -1771,7 +1610,6 @@ def stress_centrality(
     directed: bool = False,
     max_iter: int = 100,
     dedupe_edges: bool = True,
-    caches: list | None = None,
 ) -> DataFrame:
     """Sampled-source STRESS centrality — the path-centrality measure
     the graph family lacked: for every node v, the number of shortest
@@ -1827,8 +1665,6 @@ def stress_centrality(
     Non-convergence RAISES past ``max_iter`` rather than returning
     truncated counts.
     """
-    from ..session import checkpoint_handle, scope_caches
-
     a, b = F.col(src), F.col(dst)
     fwd = edges.select(a.alias("a"), b.alias("b"))
     adj = fwd if directed else fwd.unionByName(
@@ -1843,27 +1679,26 @@ def stress_centrality(
         # deduped bipartite edge list whose two node namespaces cannot
         # collide — to skip this full-edge-list shuffle.
         adj = adj.distinct()
-    adj = adj.persist()
+    adj = persist(adj)
     adj.count()
     # forward: layers[d] = (s, node, dist, sigma) checkpointed per
     # round; visited = the LAZY union of the cached layers (each
     # layer's lineage is already truncated, so the union never deepens
     # — and the accumulated set is never re-written, unlike a per-round
     # visited.localCheckpoint whose writes total O(rounds x |visited|))
-    l0 = sources.select(
+    l0 = checkpoint(sources.select(
         F.col("node").cast("long").alias("s"),
         F.col("node").cast("long").alias("node"),
         F.lit(0).cast("long").alias("dist"),
         F.lit(1).cast("long").alias("sigma"),
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
     layers = [l0]
-    handles = [checkpoint_handle(l0)]
     visited = l0
     frontier = l0.select("s", "node", "sigma")
     depth = 0
     converged = False
     for d in range(1, max_iter + 1):
-        nxt = (
+        nxt = checkpoint(
             frontier.join(adj, frontier["node"] == adj["a"])
             .groupBy("s", F.col("b").alias("node"))
             .agg(F.sum("sigma").alias("sigma"))
@@ -1878,22 +1713,16 @@ def stress_centrality(
                 F.lit(d).cast("long").alias("dist"),
                 "sigma",
             )
-            .localCheckpoint(eager=True)
         )
-        nxt_handle = checkpoint_handle(nxt)
         if nxt.count() == 0:
-            nxt_handle.unpersist(False)
+            release(nxt)
             converged = True
             depth = d - 1
             break
         layers.append(nxt)
-        handles.append(nxt_handle)
         visited = visited.unionByName(nxt)
         frontier = nxt.select("s", "node", "sigma")
     if not converged:
-        for hd in handles:
-            hd.unpersist(False)
-        adj.unpersist()
         raise RuntimeError(
             f"stress_centrality did not exhaust the frontier within "
             f"max_iter={max_iter} rounds; raise max_iter (graph "
@@ -1926,7 +1755,7 @@ def stress_centrality(
     adj_b = adj.select(
         F.col("a").alias("node"), F.col("b").alias("succ")
     )
-    dag = (
+    dag = checkpoint(
         visited.select("s", "node", "dist")
         .join(adj_b, "node")
         .join(
@@ -1939,12 +1768,10 @@ def stress_centrality(
         )
         .filter(F.col("dsucc") == F.col("dist") + 1)
         .select("s", "node", "dist", "succ")
-        .localCheckpoint(eager=True)
     )
-    handles.append(checkpoint_handle(dag))
     # the eager DAG checkpoint was the last adjacency reader — release
     # the symmetrized edge cache before the backward chain runs
-    adj.unpersist()
+    release(adj)
     acc = layers[depth].select(
         "s", "node", F.lit(0).cast("long").alias("h")
     )
@@ -1971,13 +1798,12 @@ def stress_centrality(
         )
         acc = acc.unionByName(lay_h)
         if (depth - d) % 8 == 0:
-            acc = acc.localCheckpoint(eager=True)
-            handles.append(checkpoint_handle(acc))
+            acc = checkpoint(acc)
             lay_h = acc.filter(F.col("h").isNotNull()).join(
                 layer, ["s", "node"], "left_semi"
             ).select("s", "node", "h")
         h = lay_h
-    stress = (
+    return (
         visited.join(acc, ["s", "node"])
         .filter(F.col("node") != F.col("s"))
         .select(
@@ -1989,10 +1815,6 @@ def stress_centrality(
         .groupBy("node")
         .agg(F.sum("p").cast("long").alias("stress"))
     )
-    if caches is not None:
-        caches.extend(handles)
-        return stress
-    return scope_caches(stress, *handles)
 
 
 def _integral_weight(edges: DataFrame, weight_col: str):
@@ -2047,13 +1869,13 @@ def _m_lit(spark, val) -> DataFrame:
     return spark.sql(f"SELECT CAST('{int(val)}' AS DECIMAL(38,0)) AS __m")
 
 
+@scoped
 def modularity_stats(
     edges: DataFrame,
     *,
     src: str = "src",
     dst: str = "dst",
     weight_col: str | None = None,
-    caches: list | None = None,
     collect_m: bool = True,
 ) -> tuple[DataFrame, DataFrame | None]:
     """The two loop-invariant statistics EVERY modularity operator
@@ -2066,8 +1888,7 @@ def modularity_stats(
     * ``deg`` — (n, k): each node's weighted degree with self-loops
       counted TWICE (the shared convention of :func:`modularity_score`
       / :func:`modularity_refine_step` / :func:`modularity_merge_step`
-      — a self-loop row lands in both union arms), persisted (rides
-      ``caches=`` or the caller's own scoping);
+      — a self-loop row lands in both union arms), persisted;
     * ``m`` — the 1-row ``(__m decimal(38,0))`` total-weight literal
       (:func:`_m_lit`), collected EAGERLY here (one bounded
       partial-aggregable job; NULL on an empty edge list, exactly as
@@ -2085,7 +1906,6 @@ def modularity_stats(
     Integer-weight validation (:func:`_integral_weight`) applies
     unchanged.
     """
-    from ..session import scope_caches  # noqa: F401  (module pattern)
 
     a, b = F.col(src), F.col(dst)
     w_expr = (
@@ -2094,15 +1914,12 @@ def modularity_stats(
         else F.lit(1).cast("long")
     )
     und = edges.select(a.alias("u"), b.alias("v"), w_expr.alias("__w"))
-    deg = (
+    deg = persist(
         und.select(F.col("u").alias("n"), "__w")
         .unionByName(und.select(F.col("v").alias("n"), "__w"))
         .groupBy("n")
         .agg(F.sum("__w").cast("long").alias("k"))
-        .persist()
     )
-    if caches is not None:
-        caches.append(deg)
     if not collect_m:
         return deg, None
     dec = "decimal(38,0)"
@@ -2110,6 +1927,7 @@ def modularity_stats(
     return deg, _m_lit(edges.sparkSession, m_val)
 
 
+@scoped
 def modularity_score(
     edges: DataFrame,
     communities: DataFrame,
@@ -2120,7 +1938,6 @@ def modularity_score(
     community_col: str = "community",
     weight_col: str | None = None,
     assume_canonical: bool = False,
-    caches: list | None = None,
     deg: DataFrame | None = None,
     m: DataFrame | None = None,
 ) -> DataFrame:
@@ -2200,10 +2017,8 @@ def modularity_score(
     from them.  Values are bit-identical by construction — the
     caller's frames are the same expressions over the same rows.
     """
-    from ..session import scope_caches
 
     a, b = F.col(src), F.col(dst)
-    own: list = [] if caches is None else caches
     if (deg is not None or m is not None) and not assume_canonical:
         raise ValueError(
             "deg/m require assume_canonical=True: precomputed stats "
@@ -2232,7 +2047,7 @@ def modularity_score(
             a.alias("u"), b.alias("v"), F.lit(1).cast("long").alias("__w")
         )
     else:
-        und = (
+        und = persist(
             edges.select(
                 F.least(a, b).alias("u"),
                 F.greatest(a, b).alias("v"),
@@ -2240,9 +2055,7 @@ def modularity_score(
             .filter(F.col("u") != F.col("v"))
             .distinct()
             .withColumn("__w", F.lit(1).cast("long"))
-            .persist()
         )
-        own.append(und)
     dec = "decimal(38,0)"
     m1 = m if m is not None else und.agg(F.sum("__w").cast(dec).alias("__m"))
     # self-loops land in both branches → 2w, the weighted-degree
@@ -2313,7 +2126,7 @@ def modularity_score(
         .cast("long")
         .alias("q_e6")
     )
-    ret = (
+    return (
         per.crossJoin(F.broadcast(tot))
         .select(
             "community",
@@ -2324,9 +2137,9 @@ def modularity_score(
             "q_e6",
         )
     )
-    return ret if caches is not None else scope_caches(ret, *own)
 
 
+@scoped
 def modularity_merge_step(
     edges: DataFrame,
     communities: DataFrame,
@@ -2337,7 +2150,6 @@ def modularity_merge_step(
     community_col: str = "community",
     weight_col: str | None = None,
     assume_canonical: bool = False,
-    caches: list | None = None,
     deg: DataFrame | None = None,
     m: DataFrame | None = None,
 ) -> DataFrame:
@@ -2411,10 +2223,8 @@ def modularity_merge_step(
     ALSO runs sibling operators on the same graph (a refined
     coarsening pass); a lone merge computes each exactly once anyway.
     """
-    from ..session import scope_caches
 
     a, b = F.col(src), F.col(dst)
-    own: list = [] if caches is None else caches
     if (deg is not None or m is not None) and not assume_canonical:
         raise ValueError(
             "deg/m require assume_canonical=True: precomputed stats "
@@ -2440,7 +2250,7 @@ def modularity_merge_step(
             a.alias("u"), b.alias("v"), F.lit(1).cast("long").alias("__w")
         )
     else:
-        und = (
+        und = persist(
             edges.select(
                 F.least(a, b).alias("u"),
                 F.greatest(a, b).alias("v"),
@@ -2448,20 +2258,17 @@ def modularity_merge_step(
             .filter(F.col("u") != F.col("v"))
             .distinct()
             .withColumn("__w", F.lit(1).cast("long"))
-            .persist()
         )
-        own.append(und)
     dec = "decimal(38,0)"
-    comm = communities.select(
+    comm = persist(communities.select(
         F.col(node_col).alias("n"),
         F.col(community_col).alias("c"),
-    ).persist()
+    ))
     # EAGER for the same reason as best below: comm is referenced three
     # times (degree rollup join, both sides of the community-graph
     # double-join, final relabel) — lazy, those references materialize
     # its upstream concurrently and re-execute it per reference.
     comm.count()
-    own.append(comm)
     m1 = m if m is not None else und.agg(F.sum("__w").cast(dec).alias("__m"))
     # a self-loop lands in BOTH union branches as the same node, so it
     # contributes 2w to its endpoint's degree — the weighted-graph
@@ -2484,14 +2291,12 @@ def modularity_merge_step(
     # registered merge query).  The persisted frames are bounded by
     # the community count — exactly the coarsened state a distributed
     # Louvain keeps resident.
-    d_c = (
+    d_c = persist(
         degf.join(comm, "n")
         .groupBy("c")
         .agg(F.sum("k").cast("long").alias("d"))
-        .persist()
     )
     d_c.count()
-    own.append(d_c)
     ce = (
         und.join(
             comm.select(F.col("n").alias("u"), F.col("c").alias("cu")),
@@ -2510,7 +2315,7 @@ def modularity_merge_step(
         .groupBy("ca", "cb")
         .agg(F.sum("__w").cast("long").alias("e"))
     )
-    gains = (
+    gains = persist(
         ce.join(d_c.select(F.col("c").alias("ca"), F.col("d").alias("da")), "ca")
         .join(d_c.select(F.col("c").alias("cb"), F.col("d").alias("db")), "cb")
         .crossJoin(F.broadcast(m1))
@@ -2523,21 +2328,18 @@ def modularity_merge_step(
             ).alias("__g"),
         )
         .filter(F.col("__g") > 0)
-        .persist()
     )
     gains.count()
-    own.append(gains)
     sym_g = gains.select(
         F.col("ca").alias("c"), F.col("cb").alias("p"), "__g"
     ).unionByName(
         gains.select(F.col("cb").alias("c"), F.col("ca").alias("p"), "__g")
     )
     w = Window.partitionBy("c").orderBy(F.desc("__g"), F.asc("p"))
-    best = (
+    best = persist(
         sym_g.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select("c", "p")
-        .persist()
     )
     # EAGER (r19): best is referenced twice (both sides of the mutual
     # self-join below) — left lazy, the final action materializes the
@@ -2547,7 +2349,6 @@ def modularity_merge_step(
     # merge query).  One count() computes the blocks once; the
     # self-join then reads cache.
     best.count()
-    own.append(best)
     # mutual-best pairs are disjoint by construction (best is a
     # function of c); keep each pair once, relabel the larger id
     mapping = (
@@ -2561,16 +2362,16 @@ def modularity_merge_step(
             F.col("x.c").alias("__old"), F.col("x.p").alias("__new")
         )
     )
-    ret = (
+    return (
         comm.join(mapping, comm["c"] == mapping["__old"], "left")
         .select(
             F.col("n").alias("node"),
             F.coalesce("__new", "c").alias("community"),
         )
     )
-    return ret if caches is not None else scope_caches(ret, *own)
 
 
+@scoped
 def contract_graph(
     edges: DataFrame,
     communities: DataFrame,
@@ -2581,7 +2382,6 @@ def contract_graph(
     community_col: str = "community",
     weight_col: str | None = None,
     assume_canonical: bool = False,
-    caches: list | None = None,
 ) -> DataFrame:
     """Louvain PHASE-2 graph contraction: collapse a partition's
     communities into super-nodes and return the weighted community
@@ -2633,10 +2433,8 @@ def contract_graph(
     community pair — the same shape as one merge pass's ``ce`` stage,
     paid ONCE; output rows are bounded by community pairs ≪ |E|.
     """
-    from ..session import scope_caches
 
     a, b = F.col(src), F.col(dst)
-    own: list = [] if caches is None else caches
     if weight_col is not None:
         if not assume_canonical:
             # Same enforced convention as modularity_merge_step /
@@ -2670,12 +2468,11 @@ def contract_graph(
             .distinct()
             .withColumn("__w", F.lit(1).cast("long"))
         )
-    comm = communities.select(
+    comm = persist(communities.select(
         F.col(node_col).alias("n"),
         F.col(community_col).alias("c"),
-    ).persist()
-    own.append(comm)
-    ret = (
+    ))
+    return (
         und.join(
             comm.select(F.col("n").alias("u"), F.col("c").alias("cu")),
             "u",
@@ -2692,9 +2489,9 @@ def contract_graph(
         .groupBy(src, dst)
         .agg(F.sum("__w").cast("long").alias("weight"))
     )
-    return ret if caches is not None else scope_caches(ret, *own)
 
 
+@scoped
 def modularity_refine_step(
     edges: DataFrame,
     communities: DataFrame,
@@ -2705,7 +2502,6 @@ def modularity_refine_step(
     community_col: str = "community",
     weight_col: str | None = None,
     assume_canonical: bool = False,
-    caches: list | None = None,
     deg: DataFrame | None = None,
     m: DataFrame | None = None,
 ) -> DataFrame:
@@ -2772,10 +2568,8 @@ def modularity_refine_step(
     :func:`modularity_score`'s parameters (canonical-only, enforced;
     bit-identical by construction).
     """
-    from ..session import scope_caches
 
     a, b = F.col(src), F.col(dst)
-    own: list = [] if caches is None else caches
     if (deg is not None or m is not None) and not assume_canonical:
         raise ValueError(
             "deg/m require assume_canonical=True: precomputed stats "
@@ -2801,7 +2595,7 @@ def modularity_refine_step(
             a.alias("u"), b.alias("v"), F.lit(1).cast("long").alias("__w")
         )
     else:
-        und = (
+        und = persist(
             edges.select(
                 F.least(a, b).alias("u"),
                 F.greatest(a, b).alias("v"),
@@ -2809,15 +2603,12 @@ def modularity_refine_step(
             .filter(F.col("u") != F.col("v"))
             .distinct()
             .withColumn("__w", F.lit(1).cast("long"))
-            .persist()
         )
-        own.append(und)
     dec = "decimal(38,0)"
-    comm = communities.select(
+    comm = persist(communities.select(
         F.col(node_col).alias("n"),
         F.col(community_col).alias("c"),
-    ).persist()
-    own.append(comm)
+    ))
     sym = und.select(
         F.col("u").alias("i"), F.col("v").alias("j"), "__w"
     ).unionByName(
@@ -2829,10 +2620,9 @@ def modularity_refine_step(
     if deg is not None:
         degf = deg.select("n", F.col("k").cast("long").alias("k"))
     else:
-        degf = sym.groupBy(F.col("i").alias("n")).agg(
+        degf = persist(sym.groupBy(F.col("i").alias("n")).agg(
             F.sum("__w").cast("long").alias("k")
-        ).persist()
-        own.append(degf)
+        ))
     m1 = m if m is not None else und.agg(F.sum("__w").cast(dec).alias("__m"))
     d_c = (
         degf.join(comm, "n")
@@ -2860,7 +2650,7 @@ def modularity_refine_step(
     # Coalescing k and d to 0 gives isolated nodes T = 0 for every
     # candidate (their only candidate is their own community, from the
     # cand union), so they stay put and pass through unchanged.
-    scored = (
+    scored = persist(
         cand.join(comm.select("n", F.col("c").alias("__own")), "n")
         .join(degf, "n", "left")
         .join(d_c, "c", "left")
@@ -2882,9 +2672,7 @@ def modularity_refine_step(
                 ).cast(dec)
             ).alias("__t"),
         )
-        .persist()
     )
-    own.append(scored)
     w = Window.partitionBy("n").orderBy(F.desc("__t"), F.asc("c"))
     pick = scored.withColumn("__rn", F.row_number().over(w)).filter(
         F.col("__rn") == 1
@@ -2892,15 +2680,15 @@ def modularity_refine_step(
     own_t = scored.filter(F.col("c") == F.col("__own")).select(
         "n", F.col("__t").alias("__t_own")
     )
-    ret = pick.join(own_t, "n").select(
+    return pick.join(own_t, "n").select(
         F.col("n").alias("node"),
         F.when(F.col("__t") > F.col("__t_own"), F.col("c"))
         .otherwise(F.col("__own"))
         .alias("community"),
     )
-    return ret if caches is not None else scope_caches(ret, *own)
 
 
+@scoped
 def modularity_refine_guarded(
     edges: DataFrame,
     communities: DataFrame,
@@ -2911,7 +2699,6 @@ def modularity_refine_guarded(
     community_col: str = "community",
     weight_col: str | None = None,
     assume_canonical: bool = False,
-    caches: list | None = None,
     evidence: dict | None = None,
     deg: DataFrame | None = None,
     m: DataFrame | None = None,
@@ -2969,14 +2756,11 @@ def modularity_refine_guarded(
     Nothing is computed beyond what the guard already needs; the dict
     is an out-param, never a cache across calls.
 
-    Lifetime caveat (ADVICE r18): with ``caches=None`` the swept
-    frame's persist is tied to the RETURNED frame via
-    ``scope_caches`` — a caller that keeps ``evidence["swept"]`` but
-    drops the result recomputes the sweep on first use (results stay
-    correct; the reuse win silently evaporates).  Callers that want
-    the evidence to stay cached independently of the result must pass
-    ``caches=`` and manage the unpersist themselves, as the
-    registered evidence queries do.
+    Lifetime caveat (ADVICE r18): the swept frame's persist lives as
+    long as the RETURNED frame (or, nested, the enclosing scope's) — a
+    caller that keeps ``evidence["swept"]`` but drops the result
+    recomputes the sweep on first use (results stay correct; the
+    reuse win silently evaporates).
 
     ``deg`` / ``m`` (r19): the sweep and both scorings each derive the
     SAME degree rollup and m aggregation from the shared canonical
@@ -2989,10 +2773,8 @@ def modularity_refine_guarded(
     nothing.  Same canonical-only contract as the sub-operators
     (precomputed stats with ``assume_canonical=False`` raise there).
     """
-    from ..session import scope_caches
 
     a, b = F.col(src), F.col(dst)
-    own: list = [] if caches is None else caches
     if weight_col is not None and not assume_canonical:
         raise ValueError(
             "weight_col requires assume_canonical=True: weighted "
@@ -3021,8 +2803,7 @@ def modularity_refine_guarded(
             .filter(F.col("src") != F.col("dst"))
             .distinct()
         )
-    und = und.persist()
-    own.append(und)
+    und = persist(und)
     if deg is None:
         # deg ONLY — the sweep and both scorings reuse one persisted
         # degree rollup instead of re-shuffling it three times.  m is
@@ -3033,30 +2814,26 @@ def modularity_refine_guarded(
         # the in-plan m is a shuffle-free scan of the cached edge
         # list, unlike deg's per-recompute shuffle.
         deg, _ = modularity_stats(
-            und, weight_col=weight_col, caches=own, collect_m=False
+            und, weight_col=weight_col, collect_m=False
         )
-    comm = communities.select(
+    comm = persist(communities.select(
         F.col(node_col).alias("node"),
         F.col(community_col).alias("community"),
-    ).persist()
-    own.append(comm)
-    refined = modularity_refine_step(
+    ))
+    refined = persist(modularity_refine_step(
         und,
         comm,
         weight_col=weight_col,
         assume_canonical=True,
-        caches=own,
         deg=deg,
         m=m,
-    ).persist()
-    own.append(refined)
+    ))
     q0_row = (
         modularity_score(
             und,
             comm,
             weight_col=weight_col,
             assume_canonical=True,
-            caches=own,
             deg=deg,
             m=m,
         )
@@ -3069,7 +2846,6 @@ def modularity_refine_guarded(
             refined,
             weight_col=weight_col,
             assume_canonical=True,
-            caches=own,
             deg=deg,
             m=m,
         )
@@ -3082,10 +2858,10 @@ def modularity_refine_guarded(
         evidence["swept"] = refined
         evidence["q_in_e6"] = q0
         evidence["q_swept_e6"] = q1
-    ret = refined if (q0 is not None and q1 is not None and q1 > q0) else comm
-    return ret if caches is not None else scope_caches(ret, *own)
+    return refined if (q0 is not None and q1 is not None and q1 > q0) else comm
 
 
+@scoped
 def louvain_coarsen(
     edges: DataFrame,
     communities: DataFrame | None = None,
@@ -3097,7 +2873,6 @@ def louvain_coarsen(
     node_col: str = "node",
     community_col: str = "community",
     assume_canonical: bool = False,
-    caches: list | None = None,
 ) -> DataFrame:
     """Louvain-style agglomerative COARSENING as a user-facing
     operator (r16 — previously this loop lived inline in the
@@ -3138,9 +2913,7 @@ def louvain_coarsen(
 
     Iteration contract: each pass's (tiny, community-count-bounded)
     output is ``localCheckpoint``'d — without truncation every pass
-    re-optimizes the whole deepening lineage (measured as a hang) —
-    and released through :func:`..session.checkpoint_handle` (a raw
-    ``Dataset.unpersist`` is a silent no-op on checkpoint blocks).
+    re-optimizes the whole deepening lineage (measured as a hang).
     The operator is therefore EAGER per pass.
 
     Output: (node, community) — LPA's schema, every seed member
@@ -3151,14 +2924,12 @@ def louvain_coarsen(
     community-count-bounded joins/windows and one-row fan-ins; the
     final relabel is one broadcastable join against the seed.
     """
-    from ..session import checkpoint_handle, scope_caches
 
     if refine not in (None, "guarded"):
         raise ValueError(
             f"refine must be None or 'guarded', got {refine!r}"
         )
     a, b = F.col(src), F.col(dst)
-    own: list = [] if caches is None else caches
     if assume_canonical:
         und = edges.select(a.alias("src"), b.alias("dst"))
     else:
@@ -3175,8 +2946,7 @@ def louvain_coarsen(
         # persist it; with a caller-supplied assignment it has exactly
         # one consumer (the contraction), so a persist would only
         # duplicate the caller's (typically already-persisted) edges
-        und = und.persist()
-        own.append(und)
+        und = persist(und)
         seed = (
             und.select(F.col("src").alias("node"))
             .unionByName(und.select(F.col("dst").alias("node")))
@@ -3188,15 +2958,11 @@ def louvain_coarsen(
             F.col(node_col).alias("node"),
             F.col(community_col).alias("community"),
         )
-    seed = seed.persist()
-    own.append(seed)
+    seed = persist(seed)
     if passes <= 0:
-        return seed if caches is not None else scope_caches(seed, *own)
+        return seed
     # the ONLY |E|-sized join of the loop
-    g = contract_graph(
-        und, seed, assume_canonical=True, caches=own
-    ).localCheckpoint()
-    own.append(checkpoint_handle(g))
+    g = checkpoint(contract_graph(und, seed, assume_canonical=True))
     mapping: DataFrame | None = None
     for t in range(passes):
         ident = (
@@ -3215,32 +2981,28 @@ def louvain_coarsen(
         pass_stats: dict = {}
         if refine == "guarded":
             sdeg, _ = modularity_stats(
-                g, weight_col="weight", caches=own, collect_m=False
+                g, weight_col="weight", collect_m=False
             )
             pass_stats = {"deg": sdeg}
-        merged = modularity_merge_step(
+        merged = checkpoint(modularity_merge_step(
             g,
             ident,
             weight_col="weight",
             assume_canonical=True,
-            caches=own,
             **pass_stats,
-        ).localCheckpoint()
-        own.append(checkpoint_handle(merged))
+        ))
         if refine == "guarded":
             # one guarded local-move sweep on the SAME super-graph,
             # scored weighted on both sides — adopted only if Q
             # strictly improves, so the per-pass monotonicity pin
             # survives by construction
-            merged = modularity_refine_guarded(
+            merged = checkpoint(modularity_refine_guarded(
                 g,
                 merged,
                 weight_col="weight",
                 assume_canonical=True,
-                caches=own,
                 **pass_stats,
-            ).localCheckpoint()
-            own.append(checkpoint_handle(merged))
+            ))
         # fixpoint check: a pass that merges nothing relabels identity
         # to itself, and every later pass would be the identity too —
         # stop before paying another contraction (bounded: the relabel
@@ -3263,17 +3025,15 @@ def louvain_coarsen(
                 mapping["community"] == F.col("__c"),
             ).select("node", F.col("__c2").alias("community"))
         if t < passes - 1:
-            g = contract_graph(
+            g = checkpoint(contract_graph(
                 g,
                 merged,
                 weight_col="weight",
                 assume_canonical=True,  # g is contract_graph's own output
-                caches=own,
-            ).localCheckpoint()
-            own.append(checkpoint_handle(g))
+            ))
     if mapping is None:
         # the very first pass was already a fixpoint
-        return seed if caches is not None else scope_caches(seed, *own)
+        return seed
     # LEFT join + coalesce (ADVICE r16): the composed mapping only
     # covers communities that reached the contracted graph — i.e. have
     # at least one edge among assignment members.  A caller-supplied
@@ -3282,7 +3042,7 @@ def louvain_coarsen(
     # violating the "every seed member present" output contract (the
     # same defect class modularity_refine_step fixed in r15/r16).
     # Coalescing to the seed's own label passes them through unchanged.
-    ret = seed.join(
+    return seed.join(
         F.broadcast(
             mapping.select(
                 F.col("node").alias("__from"),
@@ -3294,4 +3054,3 @@ def louvain_coarsen(
     ).select(
         "node", F.coalesce("__to", "community").alias("community")
     )
-    return ret if caches is not None else scope_caches(ret, *own)

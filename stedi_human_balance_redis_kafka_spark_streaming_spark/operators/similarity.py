@@ -46,6 +46,7 @@ from ..functions.vectors import (
     norm_unrolled,
     norm_unrolled_sql,
 )
+from ..session import persist, release, scoped
 
 # The wide (dim-term) projections below are assembled as SQL text and
 # parsed with ONE selectExpr/F.expr call instead of operator-by-operator
@@ -183,6 +184,7 @@ def _cached_build(df: DataFrame, ckey: tuple) -> DataFrame:
     return _cache_rehydrate(spark, data, df.schema)
 
 
+@scoped
 def kmeans_centroids(
     e: DataFrame,
     dim: int,
@@ -254,82 +256,80 @@ def kmeans_centroids(
     # by the update) — persist for the duration of training so each
     # round reuses the materialized flatten/quantize instead of
     # re-scanning the source ×2·iters (measured: the dominant cost of a
-    # small-corpus build).  Scoped strictly to this function
-    # (try/finally unpersist) — nothing leaks into the caller's session.
-    e = e.persist()
-    eq = e.selectExpr(
+    # small-corpus build).  Released before the (driver-side) centroid
+    # frame is returned — nothing leaks into the caller's session.
+    e = persist(e)
+    eq = persist(e.selectExpr(
         "vec_id",
         *[
             f"CAST(ROUND(d{i} * {quant}, 0) AS BIGINT) AS q{i}"
             for i in range(dim)
         ],
-    ).persist()
+    ))
     cents_q = eq.filter(F.col("vec_id") % seed_modulus == 0).selectExpr(
         "vec_id AS cid",
         *[f"q{i} AS k{i}" for i in range(dim)],
     )
 
     rows: list[tuple] = []
-    try:
-        for _ in range(iters):
-            cents_d = as_double(cents_q)
-            cos_c = F.round(
-                flat_dot("d", "c", dim) / (F.col("nrm") * F.col("cnrm")),
-                round_digits,
+    for _ in range(iters):
+        cents_d = as_double(cents_q)
+        cos_c = F.round(
+            flat_dot("d", "c", dim) / (F.col("nrm") * F.col("cnrm")),
+            round_digits,
+        )
+        assigned = (
+            e.crossJoin(F.broadcast(cents_d))
+            .select("vec_id", "cid", cos_c.alias("cos_c"))
+            .groupBy("vec_id")
+            .agg(
+                F.max_by(
+                    "cid",
+                    F.struct(F.col("cos_c"), (-F.col("cid")).alias("neg_cid")),
+                ).alias("cid")
             )
-            assigned = (
-                e.crossJoin(F.broadcast(cents_d))
-                .select("vec_id", "cid", cos_c.alias("cos_c"))
-                .groupBy("vec_id")
-                .agg(
-                    F.max_by(
-                        "cid",
-                        F.struct(F.col("cos_c"), (-F.col("cid")).alias("neg_cid")),
-                    ).alias("cid")
-                )
-            )
-            # Update step in LONG format: explode the quantized
-            # components to (vec_id, i, q) and aggregate THREE narrow
-            # columns keyed (cid, i) — a 64-wide sum/agg here costs
-            # seconds of Janino whole-stage-codegen compilation per
-            # round (measured ~3.4 s on a 2k-row input; pure fixed
-            # overhead), while the narrow form compiles instantly and
-            # shuffles the same bytes (n·dim values either way,
-            # partial-aggregable in both).  The assignment stage above
-            # keeps its codegen'd wide cosine — that one earns it.
-            longq = eq.select(
-                "vec_id",
-                F.posexplode(
-                    F.array(*[F.col(f"q{i}") for i in range(dim)])
-                ).alias("i", "q"),
-            )
-            sums = (
-                assigned.join(longq, "vec_id")
-                .groupBy("cid", "i")
-                .agg(F.sum("q").alias("s"), F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            )
-            # Materialize each round's centroids to a driver-side
-            # LocalRelation (eager, like the dedup-gate precedent).  The
-            # centroid table is BOUNDED by construction — k·dim exact
-            # int64s, kilobytes — and every downstream use broadcasts it
-            # anyway; without this, each broadcast consumer re-executes
-            # the whole training chain (measured ~3x re-run of the early
-            # rounds).  The mean is TRUNCATING division toward zero in
-            # exact Python ints — identical to Spark `div` / DuckDB `//`
-            # on negatives (floor division corrected by one when signs
-            # differ and a remainder exists), so the round-trip is
-            # lossless.
-            by_cid: dict[int, list[int]] = {}
-            for r in sums:
-                s, cnt = int(r["s"]), int(r["cnt"])
-                t = -((-s) // cnt) if s < 0 else s // cnt
-                by_cid.setdefault(int(r["cid"]), [0] * dim)[int(r["i"])] = t
-            rows = [(cid, *vals) for cid, vals in sorted(by_cid.items())]
-            cents_q = spark.createDataFrame(rows, schema=schema)
-    finally:
-        eq.unpersist()
-        e.unpersist()
+        )
+        # Update step in LONG format: explode the quantized
+        # components to (vec_id, i, q) and aggregate THREE narrow
+        # columns keyed (cid, i) — a 64-wide sum/agg here costs
+        # seconds of Janino whole-stage-codegen compilation per
+        # round (measured ~3.4 s on a 2k-row input; pure fixed
+        # overhead), while the narrow form compiles instantly and
+        # shuffles the same bytes (n·dim values either way,
+        # partial-aggregable in both).  The assignment stage above
+        # keeps its codegen'd wide cosine — that one earns it.
+        longq = eq.select(
+            "vec_id",
+            F.posexplode(
+                F.array(*[F.col(f"q{i}") for i in range(dim)])
+            ).alias("i", "q"),
+        )
+        sums = (
+            assigned.join(longq, "vec_id")
+            .groupBy("cid", "i")
+            .agg(F.sum("q").alias("s"), F.count(F.lit(1)).alias("cnt"))
+            .collect()
+        )
+        # Materialize each round's centroids to a driver-side
+        # LocalRelation (eager, like the dedup-gate precedent).  The
+        # centroid table is BOUNDED by construction — k·dim exact
+        # int64s, kilobytes — and every downstream use broadcasts it
+        # anyway; without this, each broadcast consumer re-executes
+        # the whole training chain (measured ~3x re-run of the early
+        # rounds).  The mean is TRUNCATING division toward zero in
+        # exact Python ints — identical to Spark `div` / DuckDB `//`
+        # on negatives (floor division corrected by one when signs
+        # differ and a remainder exists), so the round-trip is
+        # lossless.
+        by_cid: dict[int, list[int]] = {}
+        for r in sums:
+            s, cnt = int(r["s"]), int(r["cnt"])
+            t = -((-s) // cnt) if s < 0 else s // cnt
+            by_cid.setdefault(int(r["cid"]), [0] * dim)[int(r["i"])] = t
+        rows = [(cid, *vals) for cid, vals in sorted(by_cid.items())]
+        cents_q = spark.createDataFrame(rows, schema=schema)
+    release(eq)
+    release(e)
     if ckey is not None and rows:
         _cache_store(ckey, rows)
     return as_double(cents_q)
@@ -1090,6 +1090,7 @@ def ivfpq_topk(
     )
 
 
+@scoped
 def pq_codebooks_trained(
     e: DataFrame,
     dim: int,
@@ -1133,7 +1134,7 @@ def pq_codebooks_trained(
         hit = _cache_lookup(ckey)
         if hit is not None:
             return _cache_rehydrate(spark, hit, cb_schema)
-    e = e.persist()
+    e = persist(e)
 
     def _train_subspace(m: int) -> list:
         nq = e.select(
@@ -1187,23 +1188,21 @@ def pq_codebooks_trained(
             codes = sorted(by_code.items())
         return [(m, c, *k) for c, k in codes]
 
-    try:
-        # The n_sub trainings are fully independent — run them as
-        # CONCURRENT Spark jobs (driver threads; the scheduler interleaves
-        # the small stages) instead of 2·n_sub sequential job waves of
-        # driver round-trips.  Results assemble per-subspace, so the
-        # output is identical to the sequential order.
-        with ThreadPoolExecutor(max_workers=n_sub) as pool:
-            parts = [
-                row
-                for sub in pool.map(_train_subspace, range(n_sub))
-                for row in sub
-            ]
-        if ckey is not None:
-            _cache_store(ckey, parts)
-        return spark.createDataFrame(parts, schema=cb_schema)
-    finally:
-        e.unpersist()
+    # The n_sub trainings are fully independent — run them as
+    # CONCURRENT Spark jobs (driver threads; the scheduler interleaves
+    # the small stages) instead of 2·n_sub sequential job waves of
+    # driver round-trips.  Results assemble per-subspace, so the
+    # output is identical to the sequential order.
+    with ThreadPoolExecutor(max_workers=n_sub) as pool:
+        parts = [
+            row
+            for sub in pool.map(_train_subspace, range(n_sub))
+            for row in sub
+        ]
+    release(e)
+    if ckey is not None:
+        _cache_store(ckey, parts)
+    return spark.createDataFrame(parts, schema=cb_schema)
 
 
 def pq_topk_trained(

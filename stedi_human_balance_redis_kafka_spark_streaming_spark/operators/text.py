@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import tokens
+from ..session import persist, release, scoped
 
 # Tiny per-language marker lexicons for the n-gram/stopword heuristic.
 # Deliberately small and ASCII so the same lists inline into the SQL oracle.
@@ -539,6 +540,7 @@ def lm_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
 _BPE_SCHEMA = "step int, pair string, merged string, cnt long"
 
 
+@scoped
 def bpe_merges(
     docs: DataFrame,
     n_merges: int = 5,
@@ -604,55 +606,52 @@ def bpe_merges(
         if hit is not None:
             return buildcache.rehydrate(spark, hit, _BPE_SCHEMA)
 
-    words = (
+    words = persist(
         docs.select(F.explode(tokens(text_col)).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("wc"))
-        .persist()
     )
     chars = F.regexp_extract_all(F.col("w"), F.lit("."), 0)
     state = words.select("wc", F.concat_ws(" ", chars).alias("s"))
 
     out_rows: list[tuple] = []
-    try:
-        while len(out_rows) < n_merges:
-            k = min(batch, n_merges - len(out_rows))
-            toks = state.select("wc", F.split(F.col("s"), " ").alias("t"))
-            pairs = toks.select(
-                "wc",
-                F.explode(
-                    F.when(
-                        F.size("t") >= 2, F.sequence(F.lit(1), F.size("t") - 1)
-                    ).otherwise(F.array().cast("array<integer>"))
-                ).alias("i"),
-                "t",
-            ).select(
-                "wc", F.concat_ws(" ", F.slice("t", F.col("i"), 2)).alias("pair")
+    while len(out_rows) < n_merges:
+        k = min(batch, n_merges - len(out_rows))
+        toks = state.select("wc", F.split(F.col("s"), " ").alias("t"))
+        pairs = toks.select(
+            "wc",
+            F.explode(
+                F.when(
+                    F.size("t") >= 2, F.sequence(F.lit(1), F.size("t") - 1)
+                ).otherwise(F.array().cast("array<integer>"))
+            ).alias("i"),
+            "t",
+        ).select(
+            "wc", F.concat_ws(" ", F.slice("t", F.col("i"), 2)).alias("pair")
+        )
+        # Bounded collect: k rows of (pair, cnt), already ranked.
+        top = (
+            pairs.groupBy("pair")
+            .agg(F.sum("wc").alias("cnt"))
+            .orderBy(F.desc("cnt"), F.asc("pair"))
+            .limit(k)
+            .collect()
+        )
+        if not top:
+            raise ValueError(
+                f"bpe_merges ran out of adjacent pairs after "
+                f"{len(out_rows)} merges (n_merges={n_merges}) — the "
+                f"corpus is too small for the requested vocabulary"
             )
-            # Bounded collect: k rows of (pair, cnt), already ranked.
-            top = (
-                pairs.groupBy("pair")
-                .agg(F.sum("wc").alias("cnt"))
-                .orderBy(F.desc("cnt"), F.asc("pair"))
-                .limit(k)
-                .collect()
+        expr = F.concat(F.lit(" "), F.col("s"), F.lit(" "))
+        for r in top:
+            pair, fused = r["pair"], r["pair"].replace(" ", "")
+            out_rows.append((len(out_rows) + 1, pair, fused, int(r["cnt"])))
+            expr = F.replace(
+                expr, F.lit(f" {pair} "), F.lit(f" {fused} ")
             )
-            if not top:
-                raise ValueError(
-                    f"bpe_merges ran out of adjacent pairs after "
-                    f"{len(out_rows)} merges (n_merges={n_merges}) — the "
-                    f"corpus is too small for the requested vocabulary"
-                )
-            expr = F.concat(F.lit(" "), F.col("s"), F.lit(" "))
-            for r in top:
-                pair, fused = r["pair"], r["pair"].replace(" ", "")
-                out_rows.append((len(out_rows) + 1, pair, fused, int(r["cnt"])))
-                expr = F.replace(
-                    expr, F.lit(f" {pair} "), F.lit(f" {fused} ")
-                )
-            state = state.select("wc", F.trim(expr).alias("s"))
-    finally:
-        words.unpersist()
+        state = state.select("wc", F.trim(expr).alias("s"))
+    release(words)
     if ckey is not None:
         buildcache.store(ckey, out_rows)
     return spark.createDataFrame(out_rows, schema=_BPE_SCHEMA)

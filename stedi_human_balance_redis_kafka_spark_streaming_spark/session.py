@@ -1,132 +1,204 @@
-"""SparkSession factory with scale-sane defaults.
+"""SparkSession factory and the query scope that owns cached frames.
 
-The reference leaves every knob at its default (no ``.config`` call in any
-of its scripts — SURVEY.md §4 "Shuffle partitioning"); at 100 TB that is
-wrong in both directions.  This factory pins the settings that matter:
+Session factory.  The reference leaves every knob at its default (no
+``.config`` call in any of its scripts — SURVEY.md §4 "Shuffle
+partitioning"); at 100 TB that is wrong in both directions.
+:func:`get_spark` pins the settings that matter:
 
 * AQE on (runtime coalescing, skew-join splitting, dynamic join strategy);
 * shuffle partitions sized to the local core count for tests (on a real
   cluster, callers pass ``shuffle_partitions`` ≈ 2-3× total executor cores);
 * Arrow enabled so the few sanctioned Pandas-UDF operators batch-transfer;
 * UTC session timezone so results compare bit-for-bit with the DuckDB
-  oracle (DuckDB timestamps are UTC-naive).
+  oracle (DuckDB timestamps are UTC-naive);
+* the package's parent directory on the Python workers' path, so
+  Python-worker queries run from any working directory.
+
+Query scope.  Query functions return plans lazily — the caller runs the
+action — so a frame an operator persists or ``localCheckpoint``-s must
+stay in the block manager until that action has run, and no longer.
+This module is the only place that persists, checkpoints or unpersists:
+
+* :func:`persist` and :func:`checkpoint` record the frame in the
+  innermost open scope; :func:`release` frees one synchronously (a
+  superseded loop round, an input no later plan reads) — or, given the
+  frame a nested scoped call returned, what that call handed up;
+* :func:`scoped` opens a scope around a function.  A nested scope hands
+  its frames up to the enclosing one; the outermost scope ties them to
+  the frame(s) it returns with one ``weakref.finalize``, so they are
+  unpersisted when the caller drops the result.  A function that raises
+  frees its scope at once, and one that returns no frame (rows, counts)
+  frees it at return;
+* ``plans.registry.register`` scopes every registered query.
+
+The one hazard the scope keeps: a ``localCheckpoint``-ed frame's lineage
+is truncated, so a frame derived from it fails ("checkpoint block not
+found") rather than recomputes once the scope is freed.  A frame derived
+from a checkpoint must not outlive the frame the scope returned.
 """
 
 from __future__ import annotations
 
+import functools
+import logging
 import os
 import weakref
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_log = logging.getLogger(__name__)
 
 
-def scope_caches(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Tie the lifetime of ``cached`` (persisted) frames to ``result``.
+class _Scope:
+    """Frames persisted or checkpointed while one scoped call runs.  Each
+    entry pairs weak references to the Python frames that name it — the
+    persisted frame itself, plus the result of every nested scoped call
+    that handed it up — with the JVM object whose ``unpersist`` frees
+    it, so :func:`release` finds entries by frame identity."""
 
-    Query functions return plans lazily — the caller runs the action — so
-    an in-function ``unpersist()`` would evict the cache before it is ever
-    hit.  Instead, register a ``weakref.finalize`` on the *result* frame:
-    when the caller drops its reference (i.e. after the action completes,
-    in every registry/bench/driver call pattern), each cached frame is
-    unpersisted (non-blocking) so a long-lived session does not accumulate
-    blocks in the block manager.
+    __slots__ = ("parent", "held")
 
-    The finalizer holds only the JVM ``Dataset`` handles, never the Python
-    ``result`` object, so it cannot keep the result alive.  Errors are
-    swallowed: at interpreter shutdown the JVM gateway may already be gone.
-
-    CONTRACT SHARPENING (checkpoint handles on this seam): ``cached`` may
-    also be :class:`_RddHandle` objects from :func:`checkpoint_handle`.
-    For a PERSISTED frame, releasing early merely costs a recompute; for
-    a localCheckpoint handle the lineage was truncated at
-    materialization, so any plan still deriving from the checkpointed
-    frame fails hard ("checkpoint block not found") instead of
-    recomputing.  Callers passing checkpoint handles must therefore
-    ensure the returned ``result`` is the LAST plan that reads the
-    checkpoint — do not hand out other derived frames that outlive it
-    (see graph_bfs_hops for the caches= threading pattern).
-    """
-    jdfs = [c._jdf for c in cached]
-
-    def _release(jdfs=jdfs):
-        for j in jdfs:
-            try:
-                j.unpersist(False)
-            except Exception:
-                pass
-
-    weakref.finalize(result, _release)
-    return result
+    def __init__(self, parent: _Scope | None) -> None:
+        self.parent = parent
+        self.held: list[tuple[tuple[weakref.ref, ...], object]] = []
 
 
-class _RddHandle:
-    """Unpersist-able handle on the JVM RDD backing a
-    ``localCheckpoint()``-ed DataFrame.
+_SCOPE: ContextVar[_Scope | None] = ContextVar("cache_scope", default=None)
 
-    ``localCheckpoint`` registers the frame's internal RDD in the block
-    manager; without an explicit release the blocks survive until the
-    ContextCleaner's GC-driven weak refs fire (minutes later under the
-    5-min periodicGC interval — the round-8 full-suite flake).  The
-    handle exposes the same ``unpersist``/``._jdf`` duck-type as a
-    persisted DataFrame so it rides the existing ``caches=`` seam and
-    :func:`scope_caches` unchanged.
 
-    SAFETY: a localCheckpoint RDD's lineage is truncated at
-    materialization — unpersisting it before every consumer has run
-    makes the data UNRECOVERABLE (job failure, not recompute).  Only
-    release a handle when the frame's last consumer has materialized.
-    """
+def _innermost(what: str) -> _Scope:
+    scope = _SCOPE.get()
+    if scope is None:
+        raise RuntimeError(f"{what}() outside a @scoped function")
+    return scope
 
-    def __init__(self, jrdd) -> None:
-        self._jdf = jrdd  # named _jdf so scope_caches treats it uniformly
 
-    def unpersist(self, blocking: bool = False) -> None:
+def _free(handles) -> None:
+    for h in handles:
         try:
-            self._jdf.unpersist(blocking)
-        except Exception as exc:  # shutdown-safe, but never SILENT
-            # A swallowed release degrades back to ContextCleaner (GC)
-            # timing — the round-8 flake.  Warn so the degradation is
-            # visible; at interpreter shutdown the gateway may be gone
-            # and the log call itself may fail, hence the inner guard.
+            h.unpersist(False)
+        except Exception as exc:
+            # At interpreter shutdown the JVM gateway (and logging) may
+            # already be gone; otherwise a failed release is worth a line.
             try:
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "synchronous checkpoint-block release failed (%s); "
-                    "blocks will be freed by ContextCleaner GC timing "
-                    "instead",
-                    exc,
-                )
+                _log.warning("cached block release failed: %s", exc)
             except Exception:
                 pass
 
 
-def checkpoint_handle(df: DataFrame) -> _RddHandle:
-    """Handle on the persisted RDD behind ``df = x.localCheckpoint(...)``.
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``, recorded in the innermost open scope."""
+    scope = _innermost("persist")
+    df = df.persist()
+    scope.held.append(((weakref.ref(df),), df._jdf))
+    return df
 
-    The checkpointed Dataset's analyzed plan is a ``LogicalRDD`` whose
-    ``rdd()`` is exactly the RDD ``localCheckpoint`` registered in the
-    block manager; ``handle.unpersist(False)`` drops its blocks
-    synchronously — no JVM GC / ContextCleaner involvement.
 
-    This reaches through py4j internals (``queryExecution().analyzed()``),
-    so a Spark-version plan-shape change could silently hand back an RDD
-    that is NOT the checkpoint's (a no-op release).  Guard: raise at
-    handle creation unless the analyzed plan is the ``LogicalRDD`` a
-    checkpointed Dataset is defined to have — fail loud at the call
-    site, not silently at block-release time.
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, recorded in the innermost open scope.
+
+    A checkpointed Dataset's analyzed plan is a ``LogicalRDD`` whose
+    ``rdd()`` is the RDD ``localCheckpoint`` registered in the block
+    manager; unpersisting that RDD frees the blocks synchronously, where
+    ``Dataset.unpersist`` would be a silent no-op.  This reaches through
+    py4j internals, so a Spark plan-shape change raises here instead of
+    turning every release into a no-op.
     """
+    scope = _innermost("checkpoint")
+    df = df.localCheckpoint(eager=eager)
     plan = df._jdf.queryExecution().analyzed()
     cls = plan.getClass().getSimpleName()
     if cls != "LogicalRDD":
         raise RuntimeError(
-            f"checkpoint_handle expects a localCheckpoint()-ed DataFrame "
-            f"(analyzed plan LogicalRDD); got {cls} — the synchronous "
-            f"block release would be a silent no-op"
+            f"localCheckpoint()-ed DataFrame has analyzed plan {cls}, not "
+            f"LogicalRDD — its block release would be a silent no-op"
         )
-    return _RddHandle(plan.rdd())
+    scope.held.append(((weakref.ref(df),), plan.rdd()))
+    return df
+
+
+def release(df: DataFrame) -> None:
+    """Free now what the innermost open scope holding ``df`` holds under
+    it: ``df``'s own blocks if :func:`persist` or :func:`checkpoint`
+    returned it, and those a nested scoped call handed up if that call
+    returned it.
+
+    Call it only once every plan that reads those blocks has run: a
+    released checkpoint cannot be recomputed.
+    """
+    scope = _SCOPE.get()
+    while scope is not None:
+        keep, mine = [], []
+        for entry in scope.held:
+            names_df = any(r() is df for r in entry[0])
+            (mine if names_df else keep).append(entry)
+        if mine:
+            scope.held = keep
+            _free(h for _, h in mine)
+            return
+        scope = scope.parent
+    raise ValueError("release() of a frame no open scope holds")
+
+
+def _frames(result) -> list[DataFrame]:
+    """The DataFrames in a return value: the value itself, or those in a
+    (nested) tuple, list or dict of values."""
+    if isinstance(result, DataFrame):
+        return [result]
+    if isinstance(result, dict):
+        result = list(result.values())
+    if isinstance(result, (tuple, list)):
+        return [f for r in result for f in _frames(r)]
+    return []
+
+
+def _tie(frames: list[DataFrame], handles: list) -> None:
+    """Free ``handles`` once every one of ``frames`` is garbage.  The
+    finalizers hold JVM handles only, never a Python frame, so they
+    cannot keep a result alive."""
+    frames = list({id(f): f for f in frames}.values())
+    live = [len(frames)]
+
+    def _drop() -> None:
+        live[0] -= 1
+        if live[0] == 0:
+            _free(handles)
+
+    for f in frames:
+        weakref.finalize(f, _drop)
+
+
+def scoped(fn):
+    """Open a cache scope around every call of ``fn`` (see module doc)."""
+
+    @functools.wraps(fn)
+    def call(*args, **kwargs):
+        parent = _SCOPE.get()
+        scope = _Scope(parent)
+        token = _SCOPE.set(scope)
+        try:
+            result = fn(*args, **kwargs)
+        except BaseException:
+            _free(h for _, h in scope.held)
+            raise
+        finally:
+            _SCOPE.reset(token)
+        if scope.held:
+            frames = _frames(result)
+            if not frames:
+                _free(h for _, h in scope.held)
+            elif parent is not None:
+                refs = tuple(weakref.ref(f) for f in frames)
+                parent.held.extend((r + refs, h) for r, h in scope.held)
+            else:
+                _tie(frames, [h for _, h in scope.held])
+        return result
+
+    return call
 
 
 def get_spark(
@@ -158,6 +230,9 @@ def get_spark(
         # full-GC pauses otherwise land on whatever query is running.
         .config("spark.driver.extraJavaOptions", "-XX:+ExplicitGCInvokesConcurrent")
         .config("spark.ui.enabled", "false")
+        # Python workers import the package by name (pandas UDFs); they
+        # start in the driver's working directory, which need not hold it.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # testdata events.ts is parquet TIMESTAMP(NANOS) — Spark has no nanos
         # type; read as long and convert in sources.files.load_table.

@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
+import time
 
 import pytest
 
@@ -44,3 +46,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def persistent_rdd_count(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def assert_drains_to(spark, baseline: int) -> None:
+    """Assert the session's persistent RDDs fall back to ``baseline``.
+
+    Every release is synchronous (unpersist(blocking=False) removes the
+    RDD from the persistentRdds map at once); the poll only absorbs
+    finalizer timing when a reference cycle holds the result.  No JVM
+    GC: a block only the ContextCleaner would reclaim, minutes later,
+    counts as a leak."""
+    for _ in range(50):
+        if persistent_rdd_count(spark) <= baseline:
+            return
+        gc.collect()
+        time.sleep(0.2)
+    assert persistent_rdd_count(spark) <= baseline

@@ -3,109 +3,98 @@
 Round-3 VERDICT flagged that the recall-eval queries (and the dedup
 operators' inverted-index caches) persist() without unpersist(), so a
 long-lived session accumulates blocks until the ContextCleaner happens to
-reclaim them.  session.scope_caches ties each persist to the lifetime of
-the frame the caller actually holds; these tests assert the blocks are
-gone from the block manager once the result is dropped.
+reclaim them.  The query scope in session.py ties each persist and
+checkpoint to the lifetime of the frame the caller actually holds; these
+tests assert the blocks are gone from the block manager once the result
+is dropped — released by the scope itself, never by a JVM GC.
 """
 
 from __future__ import annotations
 
+import ast
 import gc
-import time
+import pathlib
 
 import pytest
+from conftest import assert_drains_to, persistent_rdd_count
 
+from stedi_human_balance_redis_kafka_spark_streaming_spark import session
 from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import dedup
 from stedi_human_balance_redis_kafka_spark_streaming_spark.plans import registry
 from stedi_human_balance_redis_kafka_spark_streaming_spark.sources.files import load_table
 
 
-def _persistent_rdd_count(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-
-def _assert_drains_to(spark, baseline: int, *, jvm_gc: bool = True) -> None:
-    # unpersist(blocking=False) removes the RDD from the persistentRdds
-    # map synchronously; poll briefly anyway to absorb finalizer timing.
-    # localCheckpoint RDDs (CC label rounds) are reclaimed by the
-    # ContextCleaner only after a JVM GC surfaces their weak refs — the
-    # same mechanism session.py's periodicGC interval relies on — so the
-    # poll nudges the JVM collector too.  ``jvm_gc=False`` counts only
-    # the operators' own synchronous releases: a checkpoint the
-    # ContextCleaner would reclaim minutes later still shows as a leak.
-    for _ in range(50):
-        if _persistent_rdd_count(spark) <= baseline:
-            return
-        gc.collect()
-        if jvm_gc:
-            spark.sparkContext._jvm.System.gc()
-        time.sleep(0.2)
-    assert _persistent_rdd_count(spark) <= baseline
-
-
 def test_operator_self_scope_releases_caches(spark, sf_dir):
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    baseline = persistent_rdd_count(spark)
     docs = load_table(spark, sf_dir, "documents")
     result = dedup.minhash_lsh_pairs(docs, threshold=0.7, shingle_n=3)
-    assert _persistent_rdd_count(spark) > baseline  # index + candidates live
+    assert persistent_rdd_count(spark) > baseline  # index + candidates live
     result.count()
     del result
-    _assert_drains_to(spark, baseline)
+    assert_drains_to(spark, baseline)
 
 
 def test_recall_query_releases_all_caches(spark, sf_dir):
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    baseline = persistent_rdd_count(spark)
     result = registry.queries()["dedup_lsh_recall"](spark, sf_dir)
     rows = result.collect()
     assert len(rows) == 1
-    assert _persistent_rdd_count(spark) > baseline
+    assert persistent_rdd_count(spark) > baseline
     del result
-    _assert_drains_to(spark, baseline)
+    assert_drains_to(spark, baseline)
 
 
 def test_caches_survive_until_action(spark, sf_dir):
-    # The scope must NOT evict eagerly: while the caller holds the result,
-    # the operators' eagerly-materialized caches stay hot for the action.
+    # The scope must NOT evict eagerly: while an enclosing scope holds the
+    # operator's result, its eagerly-materialized index stays hot for the
+    # action, and the enclosing scope can release it explicitly.
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    baseline = persistent_rdd_count(spark)
     docs = load_table(spark, sf_dir, "documents")
-    caches: list = []
-    pairs = dedup.ngram_jaccard_pairs(
-        docs, threshold=0.7, n=3, max_shingle_freq=64, caches=caches
-    )
-    assert len(caches) == 1
-    n_live = _persistent_rdd_count(spark)
-    assert n_live > baseline
-    gc.collect()
-    assert _persistent_rdd_count(spark) == n_live  # nothing released early
-    pairs.count()
-    for c in caches:
-        c.unpersist(False)
-    _assert_drains_to(spark, baseline)
+    seen: dict = {}
+
+    @session.scoped
+    def count_pairs() -> int:
+        pairs = dedup.ngram_jaccard_pairs(
+            docs, threshold=0.7, n=3, max_shingle_freq=64
+        )
+        seen["live"] = persistent_rdd_count(spark)
+        gc.collect()
+        seen["after_gc"] = persistent_rdd_count(spark)
+        n = pairs.count()
+        session.release(pairs)  # frees what the operator handed up
+        seen["released"] = persistent_rdd_count(spark)
+        return n
+
+    count_pairs()
+    assert seen["live"] == baseline + 1  # the one inverted index
+    assert seen["after_gc"] == seen["live"]  # nothing released early
+    assert seen["released"] == baseline
+    assert_drains_to(spark, baseline)
 
 
 def test_multi_signal_caches_live_through_execution_then_release(spark, sf_dir):
-    """dedup_multi_signal threads the pair-generators' index caches out
-    via the caches= seam and scopes them (plus the persisted evidence
-    graph) to ITS result — the round-4 fix for the finalizer firing on
-    the immediately-dropped inner frame and unpersisting the index
-    before execution."""
+    """dedup_multi_signal's nested operator scopes hand the pair-
+    generators' index caches (plus the persisted evidence graph) up to
+    the query's scope, tied to ITS result — the round-4 fix for the
+    finalizer firing on the immediately-dropped inner frame and
+    unpersisting the index before execution."""
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    baseline = persistent_rdd_count(spark)
     result = registry.queries()["dedup_multi_signal"](spark, sf_dir)
     # caches must still be registered while the caller holds the result
-    assert _persistent_rdd_count(spark) > baseline
+    assert persistent_rdd_count(spark) > baseline
     rows = result.collect()
     assert rows
-    assert _persistent_rdd_count(spark) > baseline
+    assert persistent_rdd_count(spark) > baseline
     del result
-    _assert_drains_to(spark, baseline)
+    assert_drains_to(spark, baseline)
 
 
 def test_srp_pairs_self_scope_releases_caches(spark, sf_dir):
-    """ADVICE r13 #2 regression pin: srp_lsh_pairs with caches=None
+    """ADVICE r13 #2 regression pin: srp_lsh_pairs called directly
     (property tests, plan audits, direct use) must release its two
     persisted frames (flattened verify frame + signature frame) once
     the caller drops the result."""
@@ -114,25 +103,25 @@ def test_srp_pairs_self_scope_releases_caches(spark, sf_dir):
     )
 
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    baseline = persistent_rdd_count(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     result = dedup.srp_lsh_pairs(emb, threshold=0.4)
     result.count()
-    assert _persistent_rdd_count(spark) > baseline
+    assert persistent_rdd_count(spark) > baseline
     del result
-    _assert_drains_to(spark, baseline)
+    assert_drains_to(spark, baseline)
 
 
 def test_followed_by_self_scope_releases_caches(spark):
     """ADVICE r13 #2 regression pin, associations side: the persisted
-    (seq, item) first/last frame scopes to the returned rules frame
-    when caches=None."""
+    (seq, item) first/last frame lives as long as the returned rules
+    frame of a direct call."""
     from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import (
         associations,
     )
 
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    baseline = persistent_rdd_count(spark)
     ev = spark.createDataFrame(
         [(f"s{i % 3}", "ab"[i % 2], i, i) for i in range(12)],
         "sid string, item string, ts long, eid long",
@@ -143,37 +132,36 @@ def test_followed_by_self_scope_releases_caches(spark):
     )
     result.count()
     del result
-    _assert_drains_to(spark, baseline)
+    assert_drains_to(spark, baseline)
 
 
 def test_substring_runs_self_scope_releases_caches(spark, sf_dir):
     """substring_run_pairs persists the gram frame once for its four
-    consumers; caches=None callers must not leak it."""
+    consumers; direct callers must not leak it."""
     from stedi_human_balance_redis_kafka_spark_streaming_spark.sources.files import (
         load_table,
     )
 
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    baseline = persistent_rdd_count(spark)
     docs = load_table(spark, sf_dir, "documents")
     result = dedup.substring_run_pairs(docs)
     result.count()
-    assert _persistent_rdd_count(spark) > baseline
+    assert persistent_rdd_count(spark) > baseline
     del result
-    _assert_drains_to(spark, baseline)
+    assert_drains_to(spark, baseline)
 
 
 def test_modularity_query_releases_all_caches(spark, sf_dir):
-    """graph_modularity threads LPA's checkpoint handle + two persists
-    through caches/scope_caches; everything drains once the scored
-    frame is dropped."""
+    """graph_modularity's scope holds LPA's final checkpoint and two
+    persists; everything drains once the scored frame is dropped."""
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    baseline = persistent_rdd_count(spark)
     result = registry.queries()["graph_modularity"](spark, sf_dir)
     rows = result.collect()
     assert len(rows) >= 1
     del result
-    _assert_drains_to(spark, baseline)
+    assert_drains_to(spark, baseline)
 
 
 def test_iterative_queries_leave_no_rdds_on_a_shared_session(spark, sf_dir):
@@ -181,14 +169,14 @@ def test_iterative_queries_leave_no_rdds_on_a_shared_session(spark, sf_dir):
     with no clearCache() in between: once each result has run and been
     dropped, no persistent RDD may remain — no greedy-round state of
     mmr_topk, no peel-round checkpoint of k_core."""
-    baseline = _persistent_rdd_count(spark)
+    baseline = persistent_rdd_count(spark)
     queries = registry.queries()
     for _ in range(2):
         for name in ("ann_mmr_topk", "graph_kcore"):
             result = queries[name](spark, sf_dir)
             assert result.collect()
             del result
-            _assert_drains_to(spark, baseline, jvm_gc=False)
+            assert_drains_to(spark, baseline)
 
 
 def test_k_core_non_convergence_raises_and_releases(spark):
@@ -199,13 +187,64 @@ def test_k_core_non_convergence_raises_and_releases(spark):
         graph,
     )
 
-    baseline = _persistent_rdd_count(spark)
+    baseline = persistent_rdd_count(spark)
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], "src long, dst long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         graph.k_core(path, k=2, max_iter=2)
-    _assert_drains_to(spark, baseline, jvm_gc=False)
+    assert_drains_to(spark, baseline)
     # the same path converges (to an empty core) once the bound allows
     assert graph.k_core(path, k=2, max_iter=6).collect() == []
-    _assert_drains_to(spark, baseline, jvm_gc=False)
+    assert_drains_to(spark, baseline)
+
+
+def test_only_session_touches_the_block_manager():
+    """One cache lifetime: no package module but session.py may call
+    persist/cache/localCheckpoint/unpersist directly — a new site must
+    go through session.persist / checkpoint / release so the query
+    scope owns its release."""
+    pkg = pathlib.Path(session.__file__).parent
+    banned = {"persist", "cache", "localCheckpoint", "unpersist"}
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pathlib.Path(session.__file__):
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in banned
+            ):
+                offenders.append(
+                    f"{path.relative_to(pkg)}:{node.lineno} .{node.func.attr}("
+                )
+    assert offenders == []
+
+
+def test_scope_frees_on_raise_and_on_rows(spark):
+    """A scoped function that raises frees its frames at once; one that
+    returns rows (no frame) frees them at return; outside any scope,
+    persist refuses."""
+    baseline = persistent_rdd_count(spark)
+    df = spark.range(10)
+
+    @session.scoped
+    def boom():
+        session.persist(df.selectExpr("id * 2 AS x")).count()
+        session.checkpoint(df.selectExpr("id * 3 AS x"))
+        raise ValueError("boom")
+
+    with pytest.raises(ValueError, match="boom"):
+        boom()
+    assert persistent_rdd_count(spark) == baseline
+
+    @session.scoped
+    def rows():
+        return session.persist(df.selectExpr("id * 5 AS x")).collect()
+
+    assert len(rows()) == 10
+    assert persistent_rdd_count(spark) == baseline
+
+    with pytest.raises(RuntimeError, match="outside a @scoped function"):
+        session.persist(df)

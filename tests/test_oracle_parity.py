@@ -107,8 +107,19 @@ QUERY_NAMES = sorted(entry_mod.oracle_sql().keys())
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, duck, name):
+    # imported here, not at module level: perfbench/oracle.py loads this
+    # module outside pytest for its canonical form
+    from conftest import assert_drains_to, persistent_rdd_count
+
     qfn = entry_mod.queries()[name]
-    spark_pdf = qfn(spark, SF_DIR).toPandas()
+    baseline = persistent_rdd_count(spark)
+    result = qfn(spark, SF_DIR)
+    spark_pdf = result.toPandas()
+    # Leak gate: once the caller drops the result, every block the query
+    # persisted or checkpointed is gone — released by its scope, with
+    # no clearCache() and no JVM GC.
+    del result
+    assert_drains_to(spark, baseline)
     duck_pdf = duck.execute(entry_mod.oracle_sql()[name]).df()
 
     assert sorted(spark_pdf.columns) == sorted(duck_pdf.columns), (

@@ -3461,21 +3461,32 @@ def test_modularity_of_cc_partition_invariants(spark, raw_edges):
     from stedi_human_balance_redis_kafka_spark_streaming_spark.operators.graph import (
         modularity_score,
     )
+    from stedi_human_balance_redis_kafka_spark_streaming_spark.session import (
+        scoped,
+    )
 
     und = {(min(s, d), max(s, d)) for s, d in raw_edges if s != d}
     if not und:
         return
     m = len(und)
     edf = spark.createDataFrame(sorted(und), "doc_a long, doc_b long")
-    comm = connected_components(edf).select(
-        F.col("doc_id").alias("node"), F.col("cluster_id").alias("community")
-    )
-    rows = modularity_score(
-        edf.select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        ),
-        comm,
-    ).collect()
+
+    # comm derives from connected_components' final checkpoint, so the
+    # composition runs in one scope that outlives it (session.scoped)
+    @scoped
+    def score_rows() -> list:
+        comm = connected_components(edf).select(
+            F.col("doc_id").alias("node"),
+            F.col("cluster_id").alias("community"),
+        )
+        return modularity_score(
+            edf.select(
+                F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+            ),
+            comm,
+        ).collect()
+
+    rows = score_rows()
     assert sum(r.in_edges for r in rows) == m
     for r in rows:
         assert r.deg_sum == 2 * r.in_edges  # components close over edges
@@ -4162,53 +4173,56 @@ def test_modularity_merge_improves_purchase_graph_q(spark):
         modularity_merge_step,
         modularity_score,
     )
+    from stedi_human_balance_redis_kafka_spark_streaming_spark.session import (
+        persist,
+        scoped,
+    )
     from stedi_human_balance_redis_kafka_spark_streaming_spark.sources.files import (
         load_table,
     )
 
     SF = "/root/testdata/sf0.001"
-    orders = load_table(spark, SF, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, SF, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    edges = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).cast("long").alias("src"),
-            (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
+
+    # every frame check() persists is freed when it returns
+    @scoped
+    def check() -> None:
+        orders = load_table(spark, SF, "orders").select(
+            "o_orderkey", "o_custkey"
         )
-        .distinct()
-        .persist()
-    )
-    held: list = [edges]
-    seed = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .select("node", (F.col("node") % 16).alias("community"))
-        .persist()
-    )
-    held.append(seed)
-    merged = modularity_merge_step(
-        edges, seed, assume_canonical=True, caches=held
-    ).persist()
-    held.append(merged)
-    q0 = modularity_score(
-        edges, seed, assume_canonical=True
-    ).select("q_e6").first()[0]
-    q1 = modularity_score(
-        edges, merged, assume_canonical=True
-    ).select("q_e6").first()[0]
-    assert q1 > q0
-    n_nodes = seed.count()
-    assert merged.count() == n_nodes
-    n_comm_before = seed.select("community").distinct().count()
-    n_comm_after = merged.select("community").distinct().count()
-    assert n_comm_after < n_comm_before
-    for h in held:
-        h.unpersist()
+        li = load_table(spark, SF, "lineitem").select(
+            "l_orderkey", "l_suppkey"
+        )
+        edges = persist(
+            orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
+            .select(
+                (F.col("o_custkey") * 2).cast("long").alias("src"),
+                (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
+            )
+            .distinct()
+        )
+        seed = persist(
+            edges.select(F.col("src").alias("node"))
+            .unionByName(edges.select(F.col("dst").alias("node")))
+            .distinct()
+            .select("node", (F.col("node") % 16).alias("community"))
+        )
+        merged = persist(
+            modularity_merge_step(edges, seed, assume_canonical=True)
+        )
+        q0 = modularity_score(
+            edges, seed, assume_canonical=True
+        ).select("q_e6").first()[0]
+        q1 = modularity_score(
+            edges, merged, assume_canonical=True
+        ).select("q_e6").first()[0]
+        assert q1 > q0
+        n_nodes = seed.count()
+        assert merged.count() == n_nodes
+        n_comm_before = seed.select("community").distinct().count()
+        n_comm_after = merged.select("community").distinct().count()
+        assert n_comm_after < n_comm_before
+
+    check()
 
 
 def test_modularity_isolated_members_and_canonical_flag(spark):
