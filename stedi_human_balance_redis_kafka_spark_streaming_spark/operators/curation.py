@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import tokens
-from ..session import checkpoint, persist, release, scoped
+from ..session import checkpoint, derivable, persist, release, scoped
 
 _SALT_OK = re.compile(r"^[A-Za-z0-9_\-]*$")
 
@@ -351,7 +351,10 @@ def connected_components(
     that round's (lazy) checkpoint, so the previous round's blocks are
     dead the moment the probe returns — they are released immediately
     (deterministic, no ContextCleaner / JVM-GC timing).  The FINAL
-    round's blocks back the returned frame and are freed with it.
+    round's blocks back the returned frame: under a registered query
+    they are freed with it; called directly they are
+    :func:`..session.derivable`, left to the ContextCleaner (safe for
+    callers that derive from the result).
     """
     sym = persist(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -411,7 +414,7 @@ def connected_components(
             f"max_iter; raise max_iter (or switch to large-star/"
             f"small-star contraction for long-chain graphs)"
         )
-    return labels.select(
+    return derivable(labels).select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
 
@@ -477,7 +480,8 @@ def cc_star(
     Checkpoint lifecycle (see :func:`connected_components`): each
     round's probe materializes its checkpoint, so the superseded
     round's blocks are released synchronously; the final edge frame and
-    the node frame back the returned join.
+    the node frame back the returned join, both
+    :func:`..session.derivable`.
     """
     e = checkpoint(
         edges.select(
@@ -533,9 +537,13 @@ def cc_star(
     # Fixpoint edges are per-component stars (child u → component-min v);
     # roots never appear as a child.  min() is belt-and-braces: at the
     # fixpoint each child has exactly one parent.
-    parents = e.groupBy(F.col("u").alias("node")).agg(F.min("v").alias("label"))
+    parents = (
+        derivable(e)
+        .groupBy(F.col("u").alias("node"))
+        .agg(F.min("v").alias("label"))
+    )
     return (
-        nodes.join(parents, "node", "left")
+        derivable(nodes).join(parents, "node", "left")
         .select(
             F.col("node").alias("doc_id"),
             F.coalesce(F.col("label"), F.col("node")).alias("cluster_id"),

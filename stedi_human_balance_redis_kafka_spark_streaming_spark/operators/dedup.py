@@ -116,7 +116,6 @@ def ngram_jaccard_pairs(
     )
 
 
-@scoped
 def _pair_intersections(
     docs: DataFrame,
     n: int,
@@ -846,7 +845,6 @@ def _snm_candidates_global(keyed: DataFrame, window: int) -> DataFrame:
     ).filter(F.col("other").isNotNull())
 
 
-@scoped
 def _snm_candidates_sharded(
     keyed: DataFrame,
     window: int,
@@ -1308,7 +1306,6 @@ def _validate_substring_params(
         raise ValueError(f"max_gram_occ must be >= 2, got {max_gram_occ}")
 
 
-@scoped
 def _raw_substring_grams(
     docs: DataFrame,
     k: int,
@@ -1342,7 +1339,6 @@ def _raw_substring_grams(
     return grams
 
 
-@scoped
 def _capped_substring_grams(
     docs: DataFrame,
     k: int,

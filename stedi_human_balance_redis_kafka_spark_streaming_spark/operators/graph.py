@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import checkpoint, persist, release, scoped
+from ..session import checkpoint, derivable, persist, release, scoped
 
 RANK_QUANT = 1_000_000_000_000  # 1e12 — rank units
 
@@ -98,6 +98,9 @@ def pagerank(
     partial-aggregable, so a hot destination combines map-side.  In
     redistribute mode the sink scalar is a 1-row broadcast, never a
     shuffle.
+
+    The final round's checkpoint backs the returned frame; it is
+    :func:`..session.derivable`, so a direct caller may derive from it.
     """
     if iters < 0:
         raise ValueError("iters must be >= 0")
@@ -289,7 +292,7 @@ def pagerank(
         release(df)
     if node_cache is not None:
         release(node_cache)
-    return ranks
+    return derivable(ranks)
 
 
 @scoped
@@ -337,7 +340,6 @@ def triangle_count(
     return n_nodes.crossJoin(n_edges).crossJoin(tri)
 
 
-@scoped
 def _oriented(
     edges: DataFrame, src: str, dst: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -545,7 +547,6 @@ def k_core(
     )
 
 
-@scoped
 def _coreness_hindex(
     und: DataFrame,
     *,

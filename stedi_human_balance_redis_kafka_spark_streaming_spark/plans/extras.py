@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..operators import associations, profiling
 from ..operators.asof import asof_join
-from ..session import checkpoint, persist, scoped
+from ..session import checkpoint, persist
 from ..sources.files import load_table, table_fingerprint
 from . import synthetic
 from .registry import register
@@ -5360,7 +5360,6 @@ def _sql_coarsen_scored(passes: int) -> str:
     """
 
 
-@scoped
 def _coarsened_purchase_partition(
     spark: SparkSession, sf_dir: str, edges: DataFrame
 ) -> DataFrame:

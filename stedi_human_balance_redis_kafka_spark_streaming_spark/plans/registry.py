@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import buildcache, dedup, joins, pipeline
-from ..session import persist, release, scoped
+from ..session import persist, query_scoped, release
 from ..sources.files import load_table, table_fingerprint
 from . import synthetic
 
@@ -31,11 +31,12 @@ _ORACLES: dict[str, str] = {}
 
 
 def register(name: str, oracle: str | None = None):
-    """Register ``fn`` as query ``name``, in a cache scope (session.scoped):
-    what it persists or checkpoints lives as long as its result."""
+    """Register ``fn`` as query ``name``, in a query cache scope
+    (session.query_scoped): what it persists or checkpoints lives as
+    long as its result."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        fn = scoped(fn)
+        fn = query_scoped(fn)
         _QUERIES[name] = fn
         if oracle is not None:
             _ORACLES[name] = oracle
@@ -1458,7 +1459,6 @@ _DUP_PAIR_CACHE_MAX_ROWS = 250_000
 _DUP_PAIR_SCHEMA = "doc_a long, doc_b long, jaccard double"
 
 
-@scoped
 def _dup_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The verified trigram-Jaccard near-dup pair graph — the shared
     ingest-time build consumed by five registered queries

@@ -29,12 +29,17 @@ This module is the only place that persists, checkpoints or unpersists:
   unpersisted when the caller drops the result.  A function that raises
   frees its scope at once, and one that returns no frame (rows, counts)
   frees it at return;
-* ``plans.registry.register`` scopes every registered query.
+* :func:`query_scoped` is :func:`scoped` for a registered query
+  (``plans.registry.register`` applies it to every one).
 
 The one hazard the scope keeps: a ``localCheckpoint``-ed frame's lineage
 is truncated, so a frame derived from it fails ("checkpoint block not
 found") rather than recomputes once the scope is freed.  A frame derived
-from a checkpoint must not outlive the frame the scope returned.
+from a checkpoint must not outlive the frame the scope returned.  An
+operator whose result callers build further plans on marks its final
+checkpoint :func:`derivable`: called directly — no registered query
+encloses it — that checkpoint is left to the ContextCleaner, which frees
+it once no plan on the JVM still reads it.
 """
 
 from __future__ import annotations
@@ -55,16 +60,17 @@ _log = logging.getLogger(__name__)
 
 class _Scope:
     """Frames persisted or checkpointed while one scoped call runs.  Each
-    entry pairs weak references to the Python frames that name it — the
+    entry holds weak references to the Python frames that name it — the
     persisted frame itself, plus the result of every nested scoped call
-    that handed it up — with the JVM object whose ``unpersist`` frees
-    it, so :func:`release` finds entries by frame identity."""
+    that handed it up — so :func:`release` finds entries by frame
+    identity; the JVM object whose ``unpersist`` frees it; and whether
+    it is :func:`derivable`."""
 
     __slots__ = ("parent", "held")
 
     def __init__(self, parent: _Scope | None) -> None:
         self.parent = parent
-        self.held: list[tuple[tuple[weakref.ref, ...], object]] = []
+        self.held: list[tuple[tuple[weakref.ref, ...], object, bool]] = []
 
 
 _SCOPE: ContextVar[_Scope | None] = ContextVar("cache_scope", default=None)
@@ -94,7 +100,7 @@ def persist(df: DataFrame) -> DataFrame:
     """``df.persist()``, recorded in the innermost open scope."""
     scope = _innermost("persist")
     df = df.persist()
-    scope.held.append(((weakref.ref(df),), df._jdf))
+    scope.held.append(((weakref.ref(df),), df._jdf, False))
     return df
 
 
@@ -117,7 +123,21 @@ def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
             f"localCheckpoint()-ed DataFrame has analyzed plan {cls}, not "
             f"LogicalRDD — its block release would be a silent no-op"
         )
-    scope.held.append(((weakref.ref(df),), plan.rdd()))
+    scope.held.append(((weakref.ref(df),), plan.rdd(), False))
+    return df
+
+
+def derivable(df: DataFrame) -> DataFrame:
+    """Mark the checkpoint ``df`` as one the caller may derive further
+    frames from.  Under a registered query it is freed with the query's
+    result like any other; called directly, it is left to the
+    ContextCleaner, so ``op(edges).select(...)`` still runs after the
+    operator's own result is dropped."""
+    scope = _innermost("derivable")
+    scope.held = [
+        (refs, h, keep or any(r() is df for r in refs))
+        for refs, h, keep in scope.held
+    ]
     return df
 
 
@@ -138,7 +158,7 @@ def release(df: DataFrame) -> None:
             (mine if names_df else keep).append(entry)
         if mine:
             scope.held = keep
-            _free(h for _, h in mine)
+            _free(h for _, h, _ in mine)
             return
         scope = scope.parent
     raise ValueError("release() of a frame no open scope holds")
@@ -146,11 +166,9 @@ def release(df: DataFrame) -> None:
 
 def _frames(result) -> list[DataFrame]:
     """The DataFrames in a return value: the value itself, or those in a
-    (nested) tuple, list or dict of values."""
+    (nested) tuple or list of values."""
     if isinstance(result, DataFrame):
         return [result]
-    if isinstance(result, dict):
-        result = list(result.values())
     if isinstance(result, (tuple, list)):
         return [f for r in result for f in _frames(r)]
     return []
@@ -172,9 +190,7 @@ def _tie(frames: list[DataFrame], handles: list) -> None:
         weakref.finalize(f, _drop)
 
 
-def scoped(fn):
-    """Open a cache scope around every call of ``fn`` (see module doc)."""
-
+def _scope_around(fn, query: bool):
     @functools.wraps(fn)
     def call(*args, **kwargs):
         parent = _SCOPE.get()
@@ -183,22 +199,37 @@ def scoped(fn):
         try:
             result = fn(*args, **kwargs)
         except BaseException:
-            _free(h for _, h in scope.held)
+            _free(h for _, h, _ in scope.held)
             raise
         finally:
             _SCOPE.reset(token)
         if scope.held:
             frames = _frames(result)
             if not frames:
-                _free(h for _, h in scope.held)
+                _free(h for _, h, _ in scope.held)
             elif parent is not None:
                 refs = tuple(weakref.ref(f) for f in frames)
-                parent.held.extend((r + refs, h) for r, h in scope.held)
+                parent.held.extend((r + refs, h, k) for r, h, k in scope.held)
             else:
-                _tie(frames, [h for _, h in scope.held])
+                # Outside a query, a derivable checkpoint is dropped
+                # from the scope: the ContextCleaner reclaims it.
+                handles = [h for _, h, k in scope.held if query or not k]
+                if handles:
+                    _tie(frames, handles)
         return result
 
     return call
+
+
+def scoped(fn):
+    """Open a cache scope around every call of ``fn`` (see module doc)."""
+    return _scope_around(fn, query=False)
+
+
+def query_scoped(fn):
+    """:func:`scoped` for a registered query: when it is the outermost
+    scope, its result's drop frees :func:`derivable` checkpoints too."""
+    return _scope_around(fn, query=True)
 
 
 def get_spark(

@@ -248,3 +248,44 @@ def test_scope_frees_on_raise_and_on_rows(spark):
 
     with pytest.raises(RuntimeError, match="outside a @scoped function"):
         session.persist(df)
+
+
+def test_direct_call_results_can_be_derived_from(spark):
+    """Called directly, connected_components, cc_star and pagerank leave
+    their final checkpoint to the ContextCleaner (session.derivable): a
+    frame derived from the result still runs after the result itself is
+    dropped.  Under a query scope the same checkpoints are freed with the
+    query's result."""
+    from pyspark.sql import functions as F
+
+    from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import (
+        curation,
+        graph,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long"
+    )
+    for op in (curation.connected_components, curation.cc_star):
+        sizes = op(edges).groupBy("cluster_id").count()
+        gc.collect()
+        assert sorted(r["count"] for r in sizes.collect()) == [2, 3]
+    ranks = graph.pagerank(
+        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+        dangling="redistribute",
+    ).select("rank_e12")
+    gc.collect()
+    assert ranks.count() == 5
+
+    @session.query_scoped
+    def clusters():
+        return curation.connected_components(edges).join(
+            curation.cc_star(edges), ["doc_id", "cluster_id"]
+        )
+
+    baseline = persistent_rdd_count(spark)
+    result = clusters()
+    assert persistent_rdd_count(spark) > baseline
+    assert len(result.collect()) == 5
+    del result
+    assert_drains_to(spark, baseline)

@@ -3461,32 +3461,21 @@ def test_modularity_of_cc_partition_invariants(spark, raw_edges):
     from stedi_human_balance_redis_kafka_spark_streaming_spark.operators.graph import (
         modularity_score,
     )
-    from stedi_human_balance_redis_kafka_spark_streaming_spark.session import (
-        scoped,
-    )
 
     und = {(min(s, d), max(s, d)) for s, d in raw_edges if s != d}
     if not und:
         return
     m = len(und)
     edf = spark.createDataFrame(sorted(und), "doc_a long, doc_b long")
-
-    # comm derives from connected_components' final checkpoint, so the
-    # composition runs in one scope that outlives it (session.scoped)
-    @scoped
-    def score_rows() -> list:
-        comm = connected_components(edf).select(
-            F.col("doc_id").alias("node"),
-            F.col("cluster_id").alias("community"),
-        )
-        return modularity_score(
-            edf.select(
-                F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-            ),
-            comm,
-        ).collect()
-
-    rows = score_rows()
+    comm = connected_components(edf).select(
+        F.col("doc_id").alias("node"), F.col("cluster_id").alias("community")
+    )
+    rows = modularity_score(
+        edf.select(
+            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+        ),
+        comm,
+    ).collect()
     assert sum(r.in_edges for r in rows) == m
     for r in rows:
         assert r.deg_sum == 2 * r.in_edges  # components close over edges
